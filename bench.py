@@ -62,196 +62,37 @@ def bench_config():
     )
 
 
-def _release_scratch(spark) -> None:
-    """Drop every cached frame and force a driver GC so ContextCleaner deletes
-    the now-unreferenced shuffle files of the stage that just finished.
-
-    Shuffle map outputs live on local disk until the ShuffleDependency that
-    owns them is garbage-collected on the driver; within one long SQL
-    execution they accumulate — the 8M-image probe measured ~53 GB of shuffle
-    writes plus ~70 GB of transient sort spill in the single fused dedup
-    execution, past this sandbox's ~80 GB free. Between staged executions the
-    dependencies ARE unreachable, but the driver JVM may not GC for many
-    minutes, so we trigger it explicitly. On a real cluster the same effect
-    comes from ``spark.cleaner.periodicGC.interval`` (we set it to 2min in
-    staged mode); peak scratch becomes max-over-stages instead of
-    sum-over-stages."""
-    spark.catalog.clearCache()
-    spark.sparkContext._jvm.System.gc()
-
-
 def run_flagship(
     master: str,
     shuffle_partitions: int,
     n_images: int,
-    staged: bool = False,
-    scratch: str | None = None,
-    verify_slices: int | None = None,
+    checkpoint_dir: str | None = None,
 ) -> dict:
-    """One full dedup+cluster job in a fresh Spark session; returns stage timings.
+    """One flagship job (``plans.pipeline.run_pipeline``) in a fresh Spark
+    session: wall time from generation to counted assignments, then dup-pair
+    recall/precision against the generator's planted truth (untimed).
 
-    ``staged=True`` is the large-input mode: each dedup sub-stage (signatures →
-    candidate edges → verify → connected components) materializes to parquet
-    under ``scratch`` and releases its shuffle scratch before the next starts.
-    Timings include the writes — it is the honest cost of a checkpointed
-    pipeline, and the mode that survives bounded local-disk. The default fused
-    mode is faster at bench scale (no materialization) and is what bench.py
-    times; the scale probe (tools/scale_probe.py --staged) uses this path.
-    """
-    from lmw_tree_spark.operators import emtree, lsh
-    from lmw_tree_spark.operators.ccomp import connected_components
-    from lmw_tree_spark.operators.signature_stage import extract_signatures
+    ``checkpoint_dir`` selects the bounded-scratch mode: every stage commits a
+    snapshot, and from 2 × ``pipeline.ROWS_PER_SLICE`` images on, dedup runs
+    in committed hash slices. Without it the job is one fused plan — faster at
+    bench scale, and what bench.py times."""
+    from lmw_tree_spark.plans.pipeline import run_pipeline
     from lmw_tree_spark.session import get_spark
     from lmw_tree_spark.sources.images import generate_images
 
-    extra_conf = {"spark.cleaner.periodicGC.interval": "2min"} if staged else None
     spark = get_spark(
         app_name=f"bench-{master}",
         master=master,
         shuffle_partitions=shuffle_partitions,
-        extra_conf=extra_conf,
     )
-    cfg = bench_config()
-    scratch_dir = None
     try:
-        if staged:
-            import tempfile
-
-            scratch_dir = scratch or tempfile.mkdtemp(prefix="flagship_staged_")
-
-            t0 = time.time()
-            images = generate_images(spark, n_images, with_truth=True)
-            extract_signatures(images.drop("dup_group"), cfg).write.mode(
-                "overwrite"
-            ).parquet(f"{scratch_dir}/sigs")
-            _release_scratch(spark)
-            sigs = spark.read.parquet(f"{scratch_dir}/sigs")
-            t_sig = time.time() - t0
-
-            t1 = time.time()
-            from pyspark.sql import functions as F
-
-            if verify_slices is not None and verify_slices < 1:
-                raise ValueError(
-                    f"verify_slices must be >= 1 when provided, got {verify_slices}"
-                )
-            n_slices = verify_slices or max(1, n_images // 2_000_000)
-            if n_slices > 1:
-                # Bucket-hash-sliced edge generation: every step of
-                # edges_from_buckets (salted chains, rep chains, capped
-                # cliques) is keyed by bucket, so slicing the bucket stream
-                # by pmod(xxhash64(bucket)) partitions the stage EXACTLY —
-                # each slice computes precisely the edges of its buckets.
-                # Buckets materialize once (one Arrow pass over signatures);
-                # each slice's window/groupBy scratch is released before the
-                # next starts. The 16M-image probe dies in this stage
-                # unsliced (~65 GB of window-sort shuffle in one execution).
-                # The same pair found by buckets in different slices
-                # duplicates across slice outputs; the verify stage below
-                # reads with dropDuplicates to restore the distinct edge set.
-                lsh.candidate_buckets(sigs, cfg).write.mode("overwrite").parquet(
-                    f"{scratch_dir}/buckets"
-                )
-                _release_scratch(spark)
-                buckets_df = spark.read.parquet(f"{scratch_dir}/buckets")
-                for s in range(n_slices):
-                    sl = buckets_df.where(
-                        F.pmod(F.xxhash64("bucket"), F.lit(n_slices)) == s
-                    )
-                    # cache_buckets=True: the slice's (bucket, salt) aggregation
-                    # feeds three consumers (chains, rep rollup, cliques);
-                    # persisting it MEMORY_AND_DISK (~2 GB per 2M-image slice,
-                    # vs the 16 GB heap) saves two recomputes of the slice scan
-                    # + groupBy. _release_scratch below drops it before the
-                    # next slice, so peak footprint stays one slice's worth.
-                    lsh.edges_from_buckets(
-                        sl, cfg.bucket_pair_cap, cfg.chain_salts, cache_buckets=True
-                    ).write.mode("overwrite").parquet(f"{scratch_dir}/edges/slice={s}")
-                    _release_scratch(spark)
-            else:
-                lsh.candidate_edges(sigs, cfg).write.mode("overwrite").parquet(
-                    f"{scratch_dir}/edges"
-                )
-                _release_scratch(spark)
-            # verify in hash-slices of the edge list: the verify join is the
-            # scratch whale (each joined row carries both endpoints' minhash
-            # prefixes — measured 21.6 GB of shuffle at 4M images, the stage
-            # the unsliced 8M run died in). Per-slice shuffle is 1/S of that
-            # and is released before the next slice starts, so peak scratch is
-            # bounded by the slice size regardless of corpus size. The slice
-            # predicate is a pure filter on the parquet scan — no extra
-            # shuffle — and slices partition the edge set exactly.
-            # A distinct pass restores the exact edge set when the sliced
-            # bucket stage above emitted the same pair from two slices (one
-            # edge-list-sized shuffle — the narrowest frame in the phase —
-            # materialized once so the verify slices below stay pure
-            # parquet-scan filters).
-            import shutil as _sh
-
-            if n_slices > 1:
-                spark.read.parquet(f"{scratch_dir}/edges").select(
-                    "src", "dst"
-                ).dropDuplicates(["src", "dst"]).write.mode("overwrite").parquet(
-                    f"{scratch_dir}/edges_distinct"
-                )
-                _release_scratch(spark)
-                # consumed intermediates are dead weight from here on —
-                # deleting them frees ~40% of the static footprint before
-                # the verify slices (each of which cycles its own shuffle
-                # scratch up to the full sig-projection size)
-                _sh.rmtree(f"{scratch_dir}/buckets", ignore_errors=True)
-                _sh.rmtree(f"{scratch_dir}/edges", ignore_errors=True)
-                edges_df = spark.read.parquet(f"{scratch_dir}/edges_distinct")
-            else:
-                edges_df = spark.read.parquet(f"{scratch_dir}/edges")
-            for s in range(n_slices):
-                sl = (
-                    edges_df.where(
-                        F.pmod(F.xxhash64("src", "dst"), F.lit(n_slices)) == s
-                    )
-                    if n_slices > 1
-                    else edges_df
-                )
-                lsh.verify_edges(sl, sigs, cfg).where("is_dup").write.mode(
-                    "overwrite"
-                ).parquet(f"{scratch_dir}/verified/slice={s}")
-                _release_scratch(spark)
-            # single post-verify cleanup point: whichever edge artifact the
-            # verify slices just consumed is dead weight before CC starts
-            # (sliced path: edges/ and buckets/ were already freed right
-            # after the distinct pass; only edges_distinct/ remains here)
-            _sh.rmtree(f"{scratch_dir}/edges_distinct", ignore_errors=True)
-            if n_slices == 1:
-                _sh.rmtree(f"{scratch_dir}/edges", ignore_errors=True)
-            connected_components(
-                spark.read.parquet(f"{scratch_dir}/verified"), vertices=sigs
-            ).write.mode("overwrite").parquet(f"{scratch_dir}/groups")
-            _release_scratch(spark)
-            groups = spark.read.parquet(f"{scratch_dir}/groups")
-            n_groups = groups.count()
-            t_dedup = time.time() - t1
-        else:
-            t0 = time.time()
-            images = generate_images(spark, n_images, with_truth=True)
-            sigs = extract_signatures(images.drop("dup_group"), cfg).persist()
-            sigs.count()
-            t_sig = time.time() - t0
-
-            t1 = time.time()
-            verified = (
-                lsh.verify_edges(lsh.candidate_edges(sigs, cfg), sigs, cfg)
-                .where("is_dup")
-                .persist()
-            )
-            groups = connected_components(verified, vertices=sigs).persist()
-            n_groups = groups.count()
-            t_dedup = time.time() - t1
-
-        t2 = time.time()
-        fit = emtree.em_tree_fit(sigs, cfg)
-        assignments = emtree.assign(sigs, fit.tree)
+        t0 = time.time()
+        images = generate_images(spark, n_images, with_truth=True)
+        res = run_pipeline(
+            spark, images.drop("dup_group"), bench_config(), checkpoint_dir
+        )
+        assignments = res.assignments.persist()
         n_assigned = assignments.count()
-        t_cluster = time.time() - t2
         total = time.time() - t0
 
         # dup-pair recall/precision vs generator ground truth (north rule
@@ -280,31 +121,23 @@ def run_flagship(
             images.where("dup_group >= 0").select("image_id", "dup_group"),
             "dup_group",
         ).persist()
-        pp_df = pair_df(groups, "dup_group").persist()
+        pp_df = pair_df(assignments, "dup_group").persist()
         n_tp, n_pp = tp_df.count(), pp_df.count()
         n_hit = tp_df.join(pp_df, ["src", "dst"]).count()
         recall = n_hit / max(n_tp, 1)
         precision = n_hit / max(n_pp, 1)
 
         return {
-            "t_signatures": round(t_sig, 2),
-            "t_dedup": round(t_dedup, 2),
-            "t_cluster": round(t_cluster, 2),
             "t_total": round(total, 2),
             "rows": n_assigned,
-            "dup_vertices": n_groups,
-            "leaves": fit.tree.n_leaves,
+            "leaves": res.tree.n_leaves,
             "dup_pair_recall": round(recall, 4),
             "dup_pair_precision": round(precision, 4),
             "n_true_pairs": n_tp,
-            "staged": staged,
+            "checkpointed": checkpoint_dir is not None,
         }
     finally:
         spark.stop()
-        if scratch_dir is not None and scratch is None:
-            import shutil
-
-            shutil.rmtree(scratch_dir, ignore_errors=True)
 
 
 def run_em_iters(master: str, shuffle_partitions: int, n_rows: int, iters: int = 2) -> dict:
@@ -441,7 +274,7 @@ def _graph_edges(spark):
     modularity/diameter) — the production shape: a campaign materializes its
     edge list once and every diagnostic reads it, so per-query walls below
     time the graph operator itself, not a rebuild of the dedup front-end."""
-    key = id(spark)
+    key = spark.sparkContext.applicationId
     if key not in _EDGE_CACHE:
         import __spark_entry__ as entry
         from lmw_tree_spark.config import SMALL

@@ -32,12 +32,11 @@ class PipelineConfig:
     bucket_pair_cap: int = 24     # buckets larger than this emit chain edges only
                                   # (chain keeps connectivity; cap bounds clique
                                   # pair volume at cap*(cap-1)/2 per bucket)
-    chain_salts: int = 4096       # fixed salt count for the two-level chain
-                                  # windows: level-1 sorts (bucket, hash(id)%this)
-                                  # sub-chains (max ~size/this rows per task at
-                                  # any skew), level-2 links ≤ this per-salt
-                                  # representatives per bucket. Explicit skew
-                                  # handling — AQE cannot split a window partition
+    chain_salts: int = 4096       # fixed salt count for the two-level chains:
+                                  # one hash aggregation on (bucket, hash(id)%this)
+                                  # builds sorted sub-chains (each ≤ ~size/this ids
+                                  # at any skew), then ≤ this per-salt
+                                  # representatives are chained per bucket
     # (substring buckets use winnowing with window = substring_len - shingle_k + 1:
     #  exact share-substring(≥L) ⇒ share-fingerprint guarantee at ~2/(w+1) density)
     verify_minhash_prefix: int = 32  # minhash values used for pair verification

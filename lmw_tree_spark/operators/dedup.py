@@ -15,7 +15,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lmw_tree_spark.functions.bitops import popcount_u64
 from lmw_tree_spark.functions.signatures import (
     band_hashes,
     char_shingle_hashes,
@@ -413,10 +412,6 @@ def contamination_pairs(
         )
         .where(F.col("containment") >= min_containment)
     )
-
-
-def _np_popcount_probe() -> None:  # pragma: no cover — keeps import referenced
-    popcount_u64(np.array([1], dtype=np.uint64))
 
 
 def editdist_pairs(

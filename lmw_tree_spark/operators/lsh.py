@@ -11,12 +11,12 @@ exhaustively; candidate generation is the scale path that makes 10^12 rows feasi
      pass: share-substring(≥L) ⇒ share-fingerprint, guaranteed (Schleimer et al.
      winnowing; exact per-group suffix-array verification in operators/suffix.py).
 2. **Edges from buckets — all JVM-side, no Python:**
-   - *chain edges*: within each bucket, sort by id and link consecutive ids
-     (``lead`` window). O(n) edges per bucket, preserves connectivity for the
+   - *chain edges*: within each bucket, link consecutive ids of the sorted
+     members. O(n) edges per bucket, preserves connectivity for the
      connected-components pass no matter how skewed the bucket — a 10M-row bucket
      of identical memes emits 10M-1 edges, never 10M² pairs. Skew is handled
-     EXPLICITLY with fixed salted keys (AQE cannot split a window partition):
-     chains run in two levels — (bucket, hash-salt) sub-chains, then per-salt
+     EXPLICITLY with fixed salted keys: chains run in two levels —
+     (bucket, hash-salt) sub-chains from one hash aggregation, then per-salt
      representatives linked within the bucket — see ``edges_from_buckets``.
    - *clique edges*: buckets with ≤ cfg.bucket_pair_cap members additionally emit
      all pairs (better direct recall for near-dup verification).
@@ -34,6 +34,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -142,9 +143,27 @@ def _lgram_bucket_frame(pdf: pd.DataFrame, k: int, window: int) -> pd.DataFrame:
     return pd.DataFrame({"bucket": keys, "image_id": np.repeat(ids, counts)})
 
 
+def _salt_groups(buckets: DataFrame, chain_salts: int) -> DataFrame:
+    """``agg1`` of :func:`edges_from_buckets`: sorted member arrays per
+    ``(bucket, hash(id) % chain_salts)``."""
+    salted = buckets.withColumn(
+        "salt", F.pmod(F.xxhash64("image_id"), F.lit(chain_salts))
+    )
+    return salted.groupBy("bucket", "salt").agg(
+        F.sort_array(F.collect_list("image_id")).alias("ids")
+    )
+
+
+def release_salt_groups(buckets: DataFrame, chain_salts: int) -> None:
+    """Unpersist the ``agg1`` cache that ``edges_from_buckets(buckets, ...,
+    chain_salts)`` left behind, once its edges are written. Spark keys a cache
+    on the plan, so rebuilding the same plan over the same ``buckets`` frame
+    finds the entry; no other cache is touched."""
+    _salt_groups(buckets, chain_salts).unpersist()
+
+
 def edges_from_buckets(
-    buckets: DataFrame, pair_cap: int, chain_salts: int = 4096,
-    cache_buckets: bool = True,
+    buckets: DataFrame, pair_cap: int, chain_salts: int = 4096
 ) -> DataFrame:
     """(bucket, image_id) → candidate edges (src < dst), JVM-only.
 
@@ -152,11 +171,10 @@ def edges_from_buckets(
     reps, bucket counts, clique join) — without materialization every consumer
     re-runs the upstream bucket generators (four Arrow mapInPandas passes over
     the signature table in the image pipeline: measured 4-8x the warm cost of
-    the stage at bench scale). ``cache_buckets`` persists the narrow
-    (bucket, id) rows MEMORY_AND_DISK before the fan-out: one materialization,
-    spill-backed so a 100 TB run (~tens of keys per row) degrades to local-disk
-    reads instead of OOM; pass False to trade recompute for zero cache
-    footprint when the upstream is itself a cheap scan.
+    the stage at bench scale). ``agg1`` below is therefore persisted
+    MEMORY_AND_DISK before the fan-out: one materialization, spill-backed so a
+    100 TB run (~tens of keys per row) degrades to local-disk reads instead of
+    OOM. :func:`release_salt_groups` drops it once the edges are written.
 
     Chain edges give O(n)-per-bucket connectivity regardless of skew; clique edges
     (bucket size ≤ pair_cap) add direct pairs for verification recall.
@@ -191,16 +209,7 @@ def edges_from_buckets(
 
     Producers guarantee (bucket, image_id) uniqueness; the final
     ``dropDuplicates`` dedups across the three edge sources."""
-    salted = buckets.withColumn(
-        "salt", F.pmod(F.xxhash64("image_id"), F.lit(chain_salts))
-    )
-    agg1 = salted.groupBy("bucket", "salt").agg(
-        F.sort_array(F.collect_list("image_id")).alias("ids")
-    )
-    if cache_buckets:
-        from pyspark import StorageLevel
-
-        agg1 = agg1.persist(StorageLevel.MEMORY_AND_DISK)
+    agg1 = _salt_groups(buckets, chain_salts).persist(StorageLevel.MEMORY_AND_DISK)
 
     # adjacent pairs of a sorted array — the chain linker shared by both levels
     adj_expr = (

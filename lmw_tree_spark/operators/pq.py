@@ -184,19 +184,20 @@ def pq_adc_topk(
     large."""
     cb = np.ascontiguousarray(codebook, dtype=np.float64)
     m, ksub, _ = cb.shape
+    queries = df if query_pred is None else df.where(query_pred)
     if codes is None:
         codes = pq_encode(df, codebook, id_col, vec_col)
         if n_rows is None:
             n_rows = df.count()
+        if n_queries is None and query_pred is None:
+            n_queries = n_rows  # codes and queries are both all of df
     elif n_rows is None:
         # the scan iterates the supplied codes table, which may be a filtered
         # or pre-built subset of df — size the chunk grid from ITS cardinality
         n_rows = codes.count()
     n_chunks = max(1, -(-int(n_rows) // chunk_rows))
-
-    queries = df if query_pred is None else df.where(query_pred)
     if n_queries is None:
-        n_queries = int(n_rows) if query_pred is None else queries.count()
+        n_queries = queries.count()
     n_qchunks = max(1, -(-int(n_queries) // q_chunk_rows))
 
     codes_c = (
@@ -411,9 +412,10 @@ def _adc_shortlist(
         return pd.DataFrame(
             {"query_id": qids[rows], "neighbor_id": sel_nids, "adc_dist": vals}
         )
-    # dense scan: subspace-at-a-time accumulation — same left-to-right
-    # summation order as a (Q, B, m).sum(axis=2), bitwise identical, 1/m
-    # the memory
+    # dense scan: subspace-at-a-time accumulation, 1/m the memory of a
+    # (Q, B, m) gather — left-to-right summation, which matches
+    # (Q, B, m).sum(axis=2) bitwise only for m < 8 (NumPy sums reductions
+    # of 8 or more terms in 8 interleaved accumulators)
     adc = np.zeros((len(qx), b))
     for j in range(m):
         adc += lut2[:, j * ksub + c[:, j]]
@@ -698,8 +700,13 @@ def _int_topk(
                 # out of BLAS with no extra O(Q·B) negate or int-cast pass;
                 # only the selected kk values per query are cast back.
                 neg_s = (-a).astype(np.float64) @ bmat.T.astype(np.float64)
-            else:
+            elif amax * bmax * a.shape[1] < 2**63:
                 neg_s = -(a @ bmat.T)  # exact int64 fallback (fixed-point extremes)
+            else:
+                raise OverflowError(
+                    f"integer dot products may exceed int64: max|a|·max|b|·d = "
+                    f"{amax * bmax * a.shape[1]} >= 2^63"
+                )
             if collapsed:
                 rows, sel_nids, vals = _topk_counts(
                     neg_s, counts, starts, pos_nids, first_nids, kk

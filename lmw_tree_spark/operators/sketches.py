@@ -50,11 +50,6 @@ def _bucket_col(seed, item, chars: int):
     return F.substring(F.md5(F.concat_ws(":", seed.cast("string"), item)), 1, chars)
 
 
-def _bucket_sql(seed_expr: str, item_expr: str, chars: int) -> str:
-    """The identical DuckDB expression (oracle parity helper)."""
-    return f"substr(md5(({seed_expr})::VARCHAR || ':' || ({item_expr})), 1, {chars})"
-
-
 # ---------------------------------------------------------------------------
 # Count-Min Sketch
 # ---------------------------------------------------------------------------

@@ -201,6 +201,14 @@ class Checkpointer:
         except FileNotFoundError:
             pass
 
+    def remove(self, *stages: str) -> None:
+        """Delete every snapshot of ``stages`` — for consumed intermediates.
+        Unlike :meth:`invalidate`, nothing stays readable by version."""
+        import shutil
+
+        for stage in stages:
+            shutil.rmtree(self._stage_dir(stage), ignore_errors=True)
+
     def metrics(self, stage: str, version: int | None = None) -> dict:
         v = self.current_version(stage) if version is None else version
         if v is None:

@@ -11,11 +11,22 @@
 Each stage checkpoints (parquet/Iceberg) with per-partition lineage metrics and is
 skipped on resume when complete. The tree itself is checkpointed as rows
 (FIXTURES.md §4 schema) so a restart continues from the fitted tree.
+
+With a checkpoint dir, candidate generation and verify run in
+``max(1, rows // ROWS_PER_SLICE)`` hash slices (``rows`` from the committed
+``signatures`` snapshot): edges per ``pmod(xxhash64(bucket), n)`` slice of the
+materialized buckets (every ``edges_from_buckets`` step is keyed by bucket, so
+this partitions the work exactly), one distinct pass, then verify per
+``pmod(xxhash64(src, dst), n)`` slice of the edge list. Each slice commits its
+own snapshot, so a killed run resumes at slice granularity, and each
+intermediate is deleted once consumed: peak scratch is one slice's shuffle.
+Without a checkpoint dir the run is never sliced.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,6 +39,9 @@ from lmw_tree_spark.operators.tree import CentroidTree
 from lmw_tree_spark.plans.checkpoint import Checkpointer
 
 TREE_STAGE_SCHEMA = "level int, node_id long, parent_id long, centroid array<long>"
+
+# signature rows per dedup slice of a checkpointed run (module docstring)
+ROWS_PER_SLICE = 2_000_000
 
 
 @dataclass
@@ -53,14 +67,10 @@ def run_pipeline(
             return build()
         out = ckpt.stage(name, build, sig_col)
         # checkpointed runs are the bounded-scratch deployment shape: the
-        # stage just materialized to parquet, so its shuffle files are dead
-        # weight — force a driver GC so ContextCleaner deletes them before
-        # the next stage starts (peak local-disk = max-over-stages, not
-        # sum; the 8M-image probe only completes this way — BASELINE.md).
-        # For corpora where the verify JOIN alone exceeds local disk, the
-        # hash-sliced verify in bench.run_flagship(staged=True) is the
-        # template (pmod(xxhash64) slices of the edge list, released
-        # between slices).
+        # stage (or slice) just materialized to parquet, so its shuffle files
+        # are dead weight — force a driver GC so ContextCleaner deletes them
+        # before the next one starts (peak local-disk = max-over-stages, not
+        # sum; the 8M-image probe only completes this way — BASELINE.md)
         try:
             spark.sparkContext._jvm.System.gc()
         except AttributeError:
@@ -74,8 +84,18 @@ def run_pipeline(
         # single-action reuse without a durable checkpoint
         sigs = sigs.persist()
 
+    n_slices = (
+        1 if ckpt is None
+        else max(1, ckpt.metrics("signatures")["rows"] // ROWS_PER_SLICE)
+    )
+
     def build_verified() -> DataFrame:
-        edges = lsh.verify_edges(lsh.candidate_edges(sigs, cfg), sigs, cfg).where("is_dup")
+        if n_slices > 1:
+            edges = _sliced_verified(staged, ckpt, sigs, cfg, n_slices)
+        else:
+            edges = lsh.verify_edges(
+                lsh.candidate_edges(sigs, cfg), sigs, cfg
+            ).where("is_dup")
         if cfg.suffix_dup_min_len is not None:
             # exact suffix-array substring pass on captions (operators/suffix.py):
             # pairs sharing ≥ suffix_dup_min_len chars are dup edges too
@@ -95,6 +115,10 @@ def run_pipeline(
         return edges
 
     verified = staged("verified_pairs", build_verified)
+    if n_slices > 1:
+        ckpt.remove(
+            "candidate_edges", *(f"verified_pairs_{s}" for s in range(n_slices))
+        )
     if ckpt is None:
         # CC's label loop starts from these edges; don't recompute the whole
         # candidate-generation DAG when materializing them
@@ -144,3 +168,41 @@ def run_pipeline(
     # are the former, this per-cluster stats table is the latter
     stats = staged("cluster_stats", lambda: emtree.cluster_stats(assignments))
     return PipelineResult(sigs, groups, assignments, stats, tree, metrics)
+
+
+def _sliced_verified(staged, ckpt, sigs, cfg, n: int) -> DataFrame:
+    """Candidate generation and verify in ``n`` committed hash slices (module
+    docstring); returns the union of the verified slices. ``staged`` builds or
+    reuses one snapshot, so on resume only the missing slices run."""
+
+    def in_slice(s: int, *cols: str):
+        return F.pmod(F.xxhash64(*cols), F.lit(n)) == s
+
+    def bucket_edges(buckets: DataFrame, s: int) -> DataFrame:
+        sl = buckets.where(in_slice(s, "bucket"))
+        out = staged(
+            f"bucket_edges_{s}",
+            lambda: lsh.edges_from_buckets(sl, cfg.bucket_pair_cap, cfg.chain_salts),
+        )
+        # the slice's persisted (bucket, salt) aggregation is dead weight once
+        # its edges are on disk
+        lsh.release_salt_groups(sl, cfg.chain_salts)
+        return out
+
+    def distinct_edges() -> DataFrame:
+        buckets = staged("buckets", lambda: lsh.candidate_buckets(sigs, cfg))
+        parts = [bucket_edges(buckets, s) for s in range(n)]
+        return reduce(DataFrame.unionByName, parts).dropDuplicates(["src", "dst"])
+
+    edges = staged("candidate_edges", distinct_edges)
+    ckpt.remove("buckets", *(f"bucket_edges_{s}" for s in range(n)))
+    parts = [
+        staged(
+            f"verified_pairs_{s}",
+            lambda: lsh.verify_edges(
+                edges.where(in_slice(s, "src", "dst")), sigs, cfg
+            ).where("is_dup"),
+        )
+        for s in range(n)
+    ]
+    return reduce(DataFrame.unionByName, parts)

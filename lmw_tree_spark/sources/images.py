@@ -160,14 +160,3 @@ def generate_images(
             yield generate_batch(b["id"].to_numpy(), with_truth)
 
     return spark.range(0, n, 1, partitions).mapInPandas(gen, schema)
-
-
-def n_images_for_sf_dir(sf_dir: str) -> int:
-    """Scale the synthetic image count off the driver's sf directory name so tests
-    and the correctness harness get size-consistent inputs (sf0.001 → 700 rows)."""
-    name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    try:
-        sf = float(name.replace("sf", ""))
-    except ValueError:
-        sf = 0.001
-    return max(70, int(sf * 700_000))

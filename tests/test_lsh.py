@@ -312,7 +312,7 @@ def test_bucket_slices_partition_edge_generation_exactly(spark):
     want = {
         (r.src, r.dst)
         for r in edges_from_buckets(
-            buckets, SMALL.bucket_pair_cap, SMALL.chain_salts, cache_buckets=False
+            buckets, SMALL.bucket_pair_cap, SMALL.chain_salts
         ).collect()
     }
     got = set()
@@ -322,7 +322,7 @@ def test_bucket_slices_partition_edge_generation_exactly(spark):
         got |= {
             (r.src, r.dst)
             for r in edges_from_buckets(
-                sl, SMALL.bucket_pair_cap, SMALL.chain_salts, cache_buckets=False
+                sl, SMALL.bucket_pair_cap, SMALL.chain_salts
             ).collect()
         }
     assert got == want and len(want) > 0

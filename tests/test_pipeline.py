@@ -239,3 +239,136 @@ def test_snapshot_expiry_and_orphan_sweep(spark, tmpdir_ck):
     cp.write("s", base)
     assert cp.current_version("s") == 5
     assert cp.read("s").count() == 12
+
+
+# --- sliced checkpointed runs ------------------------------------------------
+
+SLICED_N = 240
+
+
+def _outputs(spark, ck_dir, res):
+    """(verified pairs, dup groups, assignments) of a checkpointed run."""
+    verified = Checkpointer(spark, ck_dir).read("verified_pairs")
+    return (
+        {(r.src, r.dst) for r in verified.select("src", "dst").collect()},
+        {r.image_id: r.dup_group for r in res.dup_groups.collect()},
+        {
+            r.image_id: (r.cluster_id, r.distance, r.dup_group)
+            for r in res.assignments.collect()
+        },
+    )
+
+
+@pytest.fixture(scope="module")
+def unsliced_run(spark, tmp_path_factory):
+    """One checkpointed run below ROWS_PER_SLICE: the unsliced reference."""
+    images = generate_images(spark, SLICED_N)
+    ck = str(tmp_path_factory.mktemp("unsliced"))
+    res = run_pipeline(spark, images, SMALL, checkpoint_dir=ck)
+    return images, _outputs(spark, ck, res)
+
+
+def _count_calls(monkeypatch, owner, attr, before=None):
+    """Wrap ``owner.attr`` to count its calls, running ``before(n, *args)``
+    first on the n-th call (0-based); returns the call list."""
+    calls = []
+    real = getattr(owner, attr)
+
+    def wrapper(*args, **kwargs):
+        if before is not None:
+            before(len(calls), *args)
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(owner, attr, wrapper)
+    return calls
+
+
+@pytest.mark.slow
+def test_sliced_pipeline_matches_unsliced(spark, tmp_path, monkeypatch, unsliced_run):
+    """Three committed slices of edge generation and verify give exactly the
+    unsliced run's verified pairs, dup groups and assignments; each slice's
+    persisted (bucket, salt) aggregation is released before the next slice
+    starts, a cache the caller owns survives, and every consumed
+    intermediate is deleted."""
+    from pyspark import StorageLevel
+
+    from lmw_tree_spark.operators import lsh
+    from lmw_tree_spark.plans import pipeline
+
+    images, want = unsliced_run
+    monkeypatch.setattr(pipeline, "ROWS_PER_SLICE", SLICED_N // 3)
+    jsc = spark.sparkContext._jsc
+    persisted = []
+
+    def at_slice_start(n, buckets, pair_cap, chain_salts):
+        persisted.append(jsc.getPersistentRDDs().size())
+        if n:
+            prev = edge_calls[n - 1][0]
+            assert lsh._salt_groups(prev, chain_salts).storageLevel == StorageLevel.NONE
+
+    edge_calls = _count_calls(monkeypatch, lsh, "edges_from_buckets", at_slice_start)
+    verify_calls = _count_calls(monkeypatch, lsh, "verify_edges")
+    owned = spark.range(5).persist()
+    owned.count()
+    ck = str(tmp_path / "ck")
+    res = run_pipeline(spark, images, SMALL, checkpoint_dir=ck)
+
+    assert _outputs(spark, ck, res) == want
+    assert len(edge_calls) == 3 and len(verify_calls) == 3
+    assert max(persisted[1:]) <= persisted[0], persisted
+    assert owned.storageLevel != StorageLevel.NONE
+    owned.unpersist()
+    assert sorted(os.listdir(ck)) == [
+        "assignments", "cluster_stats", "dup_groups", "signatures", "tree",
+        "verified_pairs",
+    ]
+
+
+@pytest.mark.slow
+def test_sliced_pipeline_resumes_after_failed_verify_slice(
+    spark, tmp_path, monkeypatch, unsliced_run
+):
+    """A run killed inside the second verify slice resumes from its committed
+    slices: the rerun reads the first verify slice at its original snapshot
+    version, rebuilds nothing before it, and ends with the clean run's
+    assignments."""
+    from lmw_tree_spark.operators import lsh
+    from lmw_tree_spark.plans import pipeline
+
+    images, want = unsliced_run
+    monkeypatch.setattr(pipeline, "ROWS_PER_SLICE", SLICED_N // 3)
+
+    def kill_second(n, *_args):
+        if n == 1:
+            raise RuntimeError("killed inside verify slice 1")
+
+    _count_calls(monkeypatch, lsh, "verify_edges", kill_second)
+    ck = str(tmp_path / "ck")
+    with pytest.raises(RuntimeError, match="verify slice 1"):
+        run_pipeline(spark, images, SMALL, checkpoint_dir=ck)
+    cp = Checkpointer(spark, ck)
+    assert not cp.exists("verified_pairs_1")
+    committed = cp.current_version("verified_pairs_0")
+    assert committed is not None
+
+    monkeypatch.undo()
+    monkeypatch.setattr(pipeline, "ROWS_PER_SLICE", SLICED_N // 3)
+    verify_calls = _count_calls(monkeypatch, lsh, "verify_edges")
+    writes = _count_calls(monkeypatch, Checkpointer, "write")
+    slice0_versions = []
+
+    def note_slice0(_n, ck_self, stage, *_args):
+        if stage == "verified_pairs_0":
+            slice0_versions.append(ck_self.current_version(stage))
+
+    _count_calls(monkeypatch, Checkpointer, "read", note_slice0)
+    res = run_pipeline(spark, images, SMALL, checkpoint_dir=ck)
+
+    assert len(verify_calls) == 2
+    assert slice0_versions == [committed]
+    assert [w[1] for w in writes] == [
+        "verified_pairs_1", "verified_pairs_2", "verified_pairs",
+        "dup_groups", "tree", "assignments", "cluster_stats",
+    ]
+    assert _outputs(spark, ck, res)[2] == want[2]

@@ -295,6 +295,20 @@ def test_pq_adc_corpus_sized_queries_bounded_grid(spark):
         assert [(v, i) for v, i in zip(got.adc_dist, got.neighbor_id)] == want
 
 
+def test_pq_adc_query_chunks_sized_from_queries_not_codes(spark):
+    """query_pred=None scans every row of df as a query; with a pre-filtered
+    ``codes`` table the query-chunk grid must still be sized from df
+    (100 queries / 10 per chunk = 10 query-chunks), not from the 10 codes."""
+    n, d, m, ksub = 100, 8, 2, 16
+    df, _x = _det_df(spark, n, d)
+    cb = np.random.default_rng(3).normal(size=(m, ksub, d // m))
+    codes = pq_encode(df, cb).where("vec_id < 10")
+    out = pq_adc_topk(df, cb, k=2, codes=codes, q_chunk_rows=10)
+    plan = out._jdf.queryExecution().analyzed().toString()
+    assert "sequence(0, 9" in plan and "sequence(0, 0" in plan, plan
+    assert out.count() == 2 * n
+
+
 def test_sq8_corpus_sized_queries_bounded_grid(spark):
     """Same ADVICE shape for _int_topk: at query_pred=None each cogroup held
     the full query set (Q × 65536 int64 scores ≈ 63 GB per task at 120k rows).
@@ -322,27 +336,47 @@ def test_sq8_corpus_sized_queries_bounded_grid(spark):
         assert [(-v, i) for v, i in zip(got.score, got.neighbor_id)] == want
 
 
+def _scaled_fixedpoint(spark, n, d, scale):
+    """_det_df vectors times ``scale``, their fixed-point codes floor(x·2^20),
+    and the int64 fallback's overflow bound max|a|·max|b|·d."""
+    from lmw_tree_spark.operators.pq import SQ8_FP_BITS
+
+    df, x = _det_df(spark, n, d)
+    big = df.selectExpr(
+        "vec_id", f"transform(embedding, v -> v * {scale:.1f}D) AS embedding"
+    )
+    f = np.floor(x * scale * float(1 << SQ8_FP_BITS)).astype(np.int64)
+    amax = int(np.abs(f).max())
+    return big, f, amax * amax * d
+
+
 def test_int_topk_exact_fallback_beyond_float53(spark):
-    """fixedpoint codes of magnitude ~2^40 overflow the float64-exact product
-    bound (amax·bmax·d ≥ 2^53), forcing the int64 matmul fallback — scores
-    must still be exact."""
+    """fixedpoint codes whose products land in [2^53, 2^63) overflow the
+    float64-exact bound but not int64, forcing the exact int64 matmul
+    fallback — scores must be exact."""
     from lmw_tree_spark.operators.pq import fixedpoint_topk
 
     n, d = 200, 4
-    df, x = _det_df(spark, n, d)
-    big = df.selectExpr(
-        "vec_id", "transform(embedding, v -> v * 1048573.0D) AS embedding"
-    )
-    xb = x * 1048573.0
-    out = fixedpoint_topk(big, k=2, query_pred=None, )
-    pdf = out.toPandas()
-    f = np.floor(xb * float(1 << 20)).astype(np.int64)
+    big, f, bound = _scaled_fixedpoint(spark, n, d, 33.0)
+    assert 2**53 <= bound < 2**63
+    pdf = fixedpoint_topk(big, k=2, query_pred=None).toPandas()
     nids = np.arange(n)
     for qid in (0, 3, 199):
         s = f @ f[qid]
         want = _np_topk_pairs(-s, nids, 2, qid)
         got = pdf[pdf.query_id == qid].sort_values("rank")
         assert [(-v, i) for v, i in zip(got.score, got.neighbor_id)] == want
+
+
+def test_int_topk_raises_at_int64_overflow(spark):
+    """At max|a|·max|b|·d >= 2^63 the int64 matmul could wrap silently and
+    rank wrong neighbors; the scan must raise instead."""
+    from lmw_tree_spark.operators.pq import fixedpoint_topk
+
+    big, _f, bound = _scaled_fixedpoint(spark, 200, 4, 1024.0)
+    assert bound >= 2**63
+    with pytest.raises(Exception, match="exceed int64"):
+        fixedpoint_topk(big, k=2, query_pred=None).collect()
 
 
 def test_topk_mask_mass_ties_exact():
