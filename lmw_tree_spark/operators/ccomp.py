@@ -13,7 +13,7 @@ iterative lineage so plans don't grow superlinearly with rounds.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -63,20 +63,21 @@ def connected_components(
         # pointer jumping: label(v) ← label(label(v)) — makes convergence
         # logarithmic in component diameter instead of linear (path-graph case)
         jump = stepped.select(F.col("id").alias("jid"), F.col("label").alias("jlabel"))
-        new_with_prev = (
+        # the convergence count is observed on the checkpoint job itself; the
+        # old label (_prev) feeds it and is dropped before materializing
+        obs = Observation()
+        labels = (
             stepped.join(jump.withColumnRenamed("jid", "label"), "label", "left")
             .select(
                 "id",
                 "_prev",
                 F.least(F.col("label"), F.coalesce("jlabel", "label")).alias("label"),
             )
+            .observe(obs, F.count_if(F.col("label") != F.col("_prev")).alias("changed"))
+            .select("id", "label")
             .localCheckpoint(eager=True)
         )
-        # convergence check is a FILTER over the frame just materialized (the
-        # old label rode along as _prev) — no extra old-vs-new join/shuffle
-        changed = new_with_prev.where(F.col("label") != F.col("_prev")).limit(1).count()
-        labels = new_with_prev.select("id", "label")
-        if changed == 0:
+        if obs.get["changed"] == 0:
             break
 
     out = labels.select(F.col("id").alias(id_col), F.col("label").alias(label_col))

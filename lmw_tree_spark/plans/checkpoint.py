@@ -15,11 +15,14 @@ plain Parquet, since this sandbox has no Iceberg jars):
   write completes.
 - **Time travel**: ``read(stage, version=N)`` / ``metrics(stage, version=N)``
   read any retained snapshot; ``snapshots(stage)`` lists them.
-- **Lineage**: every snapshot's ``_metrics.json`` carries per-partition row
-  counts and (when a packed signature column is present) the signature
-  popcount distribution — the per-partition lineage + metrics the target spec
-  requires. The underscore prefix keeps Spark's parquet reader from treating
-  it as data.
+- **Lineage**: every snapshot's ``_metrics.json`` carries one row count per
+  committed parquet file, read from that file's footer (the writer's count,
+  as in an Iceberg manifest), and — when a packed signature column is
+  present — the snapshot's signature popcount min/avg/max, observed on the
+  write itself. Before the pointer flips, the footer counts must sum to the
+  row count the write observed; a mismatch raises and the previous snapshot
+  stays current. The underscore prefix keeps Spark's parquet reader from
+  treating the sidecar as data.
 
 A restarted run skips any stage whose latest snapshot is complete, mirroring
 the reference's per-iteration structure
@@ -35,47 +38,21 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
-def _has_iceberg(spark: SparkSession) -> str | None:
-    """Return a configured Iceberg catalog name, if any."""
-    for k, v in spark.sparkContext.getConf().getAll():
-        if k.startswith("spark.sql.catalog.") and "iceberg" in str(v).lower():
-            return k.split(".")[3]
-    return None
+def _footer_rows(path: str) -> int:
+    """Row count of one parquet file, from its footer — no Spark job."""
+    import pyarrow.parquet as pq
 
-
-def partition_lineage(df: DataFrame, sig_col: str | None = None) -> list[dict]:
-    """Per-partition row counts (+ signature popcount min/avg/max when available)."""
-    aggs = [F.count("*").alias("rows")]
-    if sig_col is not None and sig_col in df.columns:
-        pop = F.aggregate(
-            F.transform(sig_col, lambda w: F.bit_count(w).cast("long")),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        aggs += [
-            F.min(pop).alias("pop_min"),
-            F.avg(pop).alias("pop_avg"),
-            F.max(pop).alias("pop_max"),
-        ]
-    rows = (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(*aggs)
-        .orderBy("_pid")
-        .collect()
-    )
-    return [r.asDict() for r in rows]
+    return pq.read_metadata(path).num_rows
 
 
 class Checkpointer:
     def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.base_dir = base_dir
-        self.iceberg_catalog = _has_iceberg(spark)
         os.makedirs(base_dir, exist_ok=True)
 
     # --- snapshot layout -------------------------------------------------
@@ -106,19 +83,19 @@ class Checkpointer:
             return None
         return v if self._complete(stage, v) else None
 
+    def _versions(self, stage: str) -> list[int]:
+        """Every version DIRECTORY of ``stage`` (complete or not), ascending."""
+        sd = self._stage_dir(stage)
+        if not os.path.isdir(sd):
+            return []
+        return sorted(
+            int(n[1:]) for n in os.listdir(sd) if n.startswith("v") and n[1:].isdigit()
+        )
+
     def snapshots(self, stage: str) -> list[dict]:
         """All complete snapshots, oldest first: (version, rows, committed_at)."""
         out = []
-        sd = self._stage_dir(stage)
-        if not os.path.isdir(sd):
-            return out
-        for name in sorted(os.listdir(sd)):
-            if not name.startswith("v"):
-                continue
-            try:
-                v = int(name[1:])
-            except ValueError:
-                continue
+        for v in self._versions(stage):
             if self._complete(stage, v):
                 m = self.metrics(stage, v)
                 out.append(
@@ -134,15 +111,7 @@ class Checkpointer:
         """One past the highest version DIRECTORY (complete or not) — never
         derived from the pointer, so an invalidated or crashed stage can't
         reuse a number and clobber a retained snapshot."""
-        sd = self._stage_dir(stage)
-        if not os.path.isdir(sd):
-            return 1
-        vs = [
-            int(name[1:])
-            for name in os.listdir(sd)
-            if name.startswith("v") and name[1:].isdigit()
-        ]
-        return max(vs, default=0) + 1
+        return max(self._versions(stage), default=0) + 1
 
     # --- public interface ------------------------------------------------
 
@@ -156,19 +125,47 @@ class Checkpointer:
         Commit protocol: parquet into a fresh version dir → metrics sidecar
         into the same dir → atomic ``_latest`` flip. Every step before the
         flip is invisible to readers; the flip itself is os.replace (atomic on
-        POSIX and on any correct HDFS/S3A rename-capable committer)."""
+        POSIX and on any correct HDFS/S3A rename-capable committer). The
+        write is the only Spark job: row count and popcount distribution are
+        observed on it, per-file counts come from the parquet footers, and
+        the re-read takes ``df``'s schema instead of inferring one."""
         t0 = time.time()
         version = self._next_version(stage)
         vdir = self._version_dir(stage, version)
-        df.write.mode("overwrite").parquet(vdir)  # fresh dir; overwrite is for retries
-        out = self.spark.read.parquet(vdir)
+        obs = Observation()
+        aggs = [F.count(F.lit(1)).alias("rows")]
+        if sig_col is not None and sig_col in df.columns:
+            pop = F.aggregate(
+                F.transform(sig_col, lambda w: F.bit_count(w).cast("long")),
+                F.lit(0).cast("long"),
+                lambda acc, x: acc + x,
+            )
+            aggs += [
+                F.min(pop).alias("pop_min"),
+                F.avg(pop).alias("pop_avg"),
+                F.max(pop).alias("pop_max"),
+            ]
+        # fresh dir; overwrite is for retries
+        df.observe(obs, *aggs).write.mode("overwrite").parquet(vdir)
+        observed = obs.get
+        partitions = [
+            {"file": n, "rows": _footer_rows(os.path.join(vdir, n))}
+            for n in sorted(os.listdir(vdir))
+            if n.startswith("part-")
+        ]
+        footer_rows = sum(p["rows"] for p in partitions)
+        if footer_rows != observed["rows"]:
+            raise RuntimeError(
+                f"{stage} v{version:05d}: parquet footers hold {footer_rows} rows, "
+                f"the write observed {observed['rows']}; not committed"
+            )
         metrics = {
             "stage": stage,
             "version": version,
-            "rows": out.count(),
+            **observed,
             "write_seconds": round(time.time() - t0, 3),
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "partitions": partition_lineage(out, sig_col),
+            "partitions": partitions,
         }
         with open(os.path.join(vdir, "_metrics.json"), "w") as f:
             json.dump(metrics, f, indent=1, default=str)
@@ -176,7 +173,7 @@ class Checkpointer:
         with open(tmp, "w") as f:
             f.write(f"v{version:05d}")
         os.replace(tmp, self._latest_file(stage))
-        return out
+        return self.spark.read.schema(df.schema).parquet(vdir)
 
     def read(self, stage: str, version: int | None = None) -> DataFrame:
         """Read the latest snapshot, or ``version`` for time travel."""
@@ -227,15 +224,8 @@ class Checkpointer:
         per version dir with (version, complete, is_current, action); this is
         metadata listing, O(snapshots), so the data files are untouched until
         :meth:`expire` executes it."""
-        sd = self._stage_dir(stage)
-        if not os.path.isdir(sd):
-            return []
+        vs = self._versions(stage)
         cur = self.current_version(stage)
-        vs = sorted(
-            int(n[1:])
-            for n in os.listdir(sd)
-            if n.startswith("v") and n[1:].isdigit()
-        )
         complete = [v for v in vs if self._complete(stage, v)]
         keep = set(complete[-keep_last:] if keep_last > 0 else [])
         if cur is not None:

@@ -23,7 +23,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default: the cores
+    this process may run on).
     ``shuffle_partitions`` defaults to the core count — on a real cluster this is
     set to ~2-3x total executor cores instead.
     """
@@ -38,7 +39,7 @@ def get_spark(
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "1073741824")
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "1073741824")
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

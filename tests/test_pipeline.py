@@ -52,15 +52,77 @@ def test_end_to_end_recall(spark, tmpdir_ck):
     assert res2.metrics == []  # tree restored from checkpoint, no refit
 
 
+def _part_files(ck, stage):
+    vdir = ck._version_dir(stage, ck.current_version(stage))
+    return sorted(n for n in os.listdir(vdir) if n.startswith("part-"))
+
+
 def test_checkpoint_lineage_metrics(spark, tmpdir_ck):
+    """_metrics.json lineage: one writer row count per committed parquet file,
+    the snapshot-level signature popcount distribution, empty commits, and
+    a commit that runs exactly one Spark job (the write)."""
     ck = Checkpointer(spark, tmpdir_ck)
     df = generate_images(spark, 40)
     out = ck.write("imgs", df)
     assert out.count() == 40
     m = ck.metrics("imgs")
     assert m["rows"] == 40
+    assert [p["file"] for p in m["partitions"]] == _part_files(ck, "imgs")
     assert sum(p["rows"] for p in m["partitions"]) == 40
     assert ck.exists("imgs")
+    assert "pop_min" not in m  # no signature column named
+
+    words = [[5, -1], [0, 0], [2**40 - 1, 7], [-(2**63), 3]]
+    sigs = spark.createDataFrame(
+        [(i, w) for i, w in enumerate(words)], "image_id long, sig array<long>"
+    ).repartition(3)
+    ck.write("sigs", sigs, sig_col="sig")
+    m = ck.metrics("sigs")
+    pops = [sum(bin(w & (2**64 - 1)).count("1") for w in ws) for ws in words]
+    assert (m["pop_min"], m["pop_max"]) == (min(pops), max(pops))
+    assert m["pop_avg"] == pytest.approx(sum(pops) / len(pops))
+    assert [p["file"] for p in m["partitions"]] == _part_files(ck, "sigs")
+    assert sum(p["rows"] for p in m["partitions"]) == m["rows"] == 4
+
+    empty = ck.write("empty", spark.range(0))
+    assert empty.count() == 0
+    m = ck.metrics("empty")
+    assert m["rows"] == 0 and sum(p["rows"] for p in m["partitions"]) == 0
+    assert ck.current_version("empty") == 1
+
+    sc = spark.sparkContext
+    group = "checkpoint-write-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        narrow = ck.write("narrow", spark.range(1000))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert narrow.schema == spark.read.parquet(
+        ck._version_dir("narrow", 1)
+    ).schema  # explicit-schema re-read equals the inferred one
+
+
+def test_checkpoint_footer_mismatch_keeps_previous_snapshot(spark, tmpdir_ck, monkeypatch):
+    """Footer row counts that disagree with the observed write count abort
+    the commit before the _latest flip: the previous snapshot stays current
+    and readable, and the aborted version dir is an orphan."""
+    from lmw_tree_spark.plans import checkpoint
+
+    ck = Checkpointer(spark, tmpdir_ck)
+    ck.write("s", generate_images(spark, 10))
+    real = checkpoint._footer_rows
+    monkeypatch.setattr(checkpoint, "_footer_rows", lambda path: real(path) - 1)
+    with pytest.raises(RuntimeError, match="footers"):
+        ck.write("s", generate_images(spark, 25))
+    assert ck.current_version("s") == 1
+    assert ck.read("s").count() == 10
+    assert ck.metrics("s")["rows"] == 10
+    assert [(r["version"], r["action"]) for r in ck.expire_plan("s")] == [
+        (1, "keep"),
+        (2, "orphan"),
+    ]
 
 
 def test_checkpoint_stage_skips_rebuild(spark, tmpdir_ck):

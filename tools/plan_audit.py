@@ -124,7 +124,7 @@ def main() -> None:
     from lmw_tree_spark.session import get_spark
     import __spark_entry__ as entry
 
-    spark = get_spark(8, shuffle_partitions=8)
+    spark = get_spark(master="local[8]", shuffle_partitions=8)
     qs = entry.queries()
 
     rows, bad = [], []
