@@ -1,14 +1,26 @@
 """Connected components over the verified dup-pair edge list → dup-group ids.
 
-Hash-to-min label propagation (Rastogi et al., ICDE 2013, "Finding Connected
-Components in Map-Reduce in Logarithmic Rounds"): every vertex repeatedly adopts the
-minimum label in its closed neighborhood. With the LSH layer's star/chain edges the
-component diameter is tiny (buckets are cliques or chains through the sorted order),
-so convergence takes O(log d) ≈ 3-6 rounds.
+Min-label propagation with pointer jumping and hooking, in the style of
+Shiloach-Vishkin / FastSV (Zhang et al., 2020). The state is
+``labels(id, label, prev)``: the current label and the one before it. Each
+round sends ``(target, source)`` messages and gives every target the minimum
+current label of its sources:
 
-All DataFrame joins/aggregations; labels are the lexicographic min image_id, which is
-deterministic and stable (ids are zero-padded). ``localCheckpoint`` truncates the
-iterative lineage so plans don't grow superlinearly with rounds.
+- every symmetric edge ``(u, v)``: a vertex sees its neighbours' labels;
+- ``(id, label)``, the pointer jump: a vertex sees its label's label; this row
+  also carries the vertex's current label, which becomes its ``prev``;
+- ``(prev, id)``, hooking: a vertex's previous label learns its current one.
+
+A round is one join of the messages with ``labels`` on ``source = id`` and one
+``groupBy(target)``. Labels never increase and are ids from a finite set, so
+the loop ends; it stops at the first round in which no label changes, and a
+fixed point has one label per component, its minimum id. Rounds grow with the
+component's diameter, slowly: on a path with shuffled ids, 10 rounds at 60
+vertices, 13 at 140 and 16 at 500; on a sorted path, 7 at 40 and 9 at 140.
+There is no round cap, since a capped loop would return split groups.
+
+Labels are the lexicographic min image_id, which is deterministic and stable
+(ids are zero-padded). ``localCheckpoint`` truncates the lineage every round.
 """
 
 from __future__ import annotations
@@ -20,7 +32,6 @@ from pyspark.sql import functions as F
 def connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
-    max_iters: int = 25,
     id_col: str = "image_id",
     label_col: str = "dup_group",
 ) -> DataFrame:
@@ -28,6 +39,15 @@ def connected_components(
 
     Vertices not touched by any edge keep themselves as their label (singleton
     groups) when a vertex universe is supplied.
+
+    ``localCheckpoint`` keeps the size estimate of the plan it ran, and a round
+    joins ``labels`` with messages built from ``labels``, so the estimate would
+    square every round until planning it exhausts the driver heap. Each round's
+    labels are therefore cached and filled by a write to the ``noop`` sink,
+    after which the planner sees their real size. That is public API (Spark
+    Connect has no ``_jdf`` to re-wrap the checkpoint's RDD with) and costs
+    one scan-only job per round. The result is checkpointed from the last
+    cache, which is then released.
     """
     sym = (
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
@@ -35,50 +55,42 @@ def connected_components(
         .dropDuplicates(["u", "v"])
         .localCheckpoint(eager=True)
     )
-
-    # seed labels with the closed-neighborhood min (= the first hash-to-min
-    # round fused into initialization): one groupBy instead of a join+agg
-    # round. Dup components are overwhelmingly tiny (pairs/triangles through
-    # clique edges), so most converge AT init and the loop's first iteration
-    # is just the no-change confirmation — one fewer full round.
+    # the first round, fused into initialization: the closed-neighborhood min
+    # from one groupBy. Dup components are mostly pairs and triangles, which
+    # converge here, so the loop's first round only confirms them.
     labels = (
         sym.groupBy("u")
         .agg(F.least(F.col("u"), F.min("v")).alias("label"))
-        .withColumnRenamed("u", "id")
+        .select(F.col("u").alias("id"), "label", F.col("u").alias("prev"))
         .localCheckpoint(eager=True)
     )
-
-    for _ in range(max_iters):
-        nbr_min = (
-            sym.join(labels.withColumnRenamed("id", "v"), "v")
-            .groupBy("u")
-            .agg(F.min("label").alias("nbr_label"))
-            .withColumnRenamed("u", "id")
+    edge_msgs = sym.select(F.col("u").alias("target"), F.col("v").alias("source"))
+    cached = None
+    while True:
+        jump = labels.select(
+            F.col("id").alias("target"),
+            F.col("label").alias("source"),
+            F.col("label").alias("prev"),
         )
-        stepped = labels.join(nbr_min, "id", "left").select(
-            "id",
-            F.col("label").alias("_prev"),
-            F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias("label"),
-        )
-        # pointer jumping: label(v) ← label(label(v)) — makes convergence
-        # logarithmic in component diameter instead of linear (path-graph case)
-        jump = stepped.select(F.col("id").alias("jid"), F.col("label").alias("jlabel"))
-        # the convergence count is observed on the checkpoint job itself; the
-        # old label (_prev) feeds it and is dropped before materializing
+        hook = labels.select(F.col("prev").alias("target"), F.col("id").alias("source"))
         obs = Observation()
-        labels = (
-            stepped.join(jump.withColumnRenamed("jid", "label"), "label", "left")
-            .select(
-                "id",
-                "_prev",
-                F.least(F.col("label"), F.coalesce("jlabel", "label")).alias("label"),
-            )
-            .observe(obs, F.count_if(F.col("label") != F.col("_prev")).alias("changed"))
-            .select("id", "label")
+        step = (
+            edge_msgs.unionByName(jump, allowMissingColumns=True)
+            .unionByName(hook, allowMissingColumns=True)
+            .join(labels.select(F.col("id").alias("source"), "label"), "source")
+            .groupBy(F.col("target").alias("id"))
+            .agg(F.min("label").alias("label"), F.max("prev").alias("prev"))
+            .observe(obs, F.count_if(F.col("label") != F.col("prev")).alias("changed"))
             .localCheckpoint(eager=True)
         )
+        if cached is not None:
+            cached.unpersist()
+        labels = cached = step.persist()
+        labels.write.format("noop").mode("overwrite").save()
         if obs.get["changed"] == 0:
             break
+    labels = labels.localCheckpoint(eager=True)
+    cached.unpersist()
 
     out = labels.select(F.col("id").alias(id_col), F.col("label").alias(label_col))
     if vertices is not None:
@@ -99,7 +111,6 @@ def merge_dup_groups(
     new_edges: DataFrame,
     id_col: str = "image_id",
     group_col: str = "dup_group",
-    max_iters: int = 25,
 ) -> DataFrame:
     """Incremental dup-group maintenance — the daily-ingest companion of
     ``connected_components``: new verified edges (shard-internal and
@@ -136,9 +147,7 @@ def merge_dup_groups(
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    comp = connected_components(
-        contracted, max_iters=max_iters, id_col="node", label_col="comp"
-    )
+    comp = connected_components(contracted, id_col="node", label_col="comp")
     existing = assignments.select(F.col(group_col).alias("node")).distinct()
     # component label: min node that IS an existing group id, else min node
     is_grp = comp.join(existing, "node", "semi").groupBy("comp").agg(

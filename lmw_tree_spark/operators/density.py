@@ -17,7 +17,7 @@ shuffle shapes are introduced:
    core iff it has >= min_core_neighbors neighbors (self excluded — the
    classic |N_eps(p)| >= minPts with p counted maps to
    min_core_neighbors = minPts - 1).
-3. clusters: hash-to-min + pointer-jumping connected components
+3. clusters: min-label propagation connected components
    (`ccomp.connected_components`) over the core-core subgraph; the cluster
    label is the min core vertex id — deterministic at any partitioning.
 4. border points: non-core vertices with >= 1 core neighbor adopt the MIN

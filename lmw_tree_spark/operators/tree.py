@@ -26,7 +26,6 @@ NumPy reference loop used in oracle tests:
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -212,10 +211,8 @@ _SMALL_BATCH = 512
 # per-parent row groups ⇒ the per-group BLAS calls and the level-wide gather
 # are overhead-dominated, while the packed path's cost is one vectorized pass
 # per distinct fanout. Few-parent levels (big row groups) stay on BLAS GEMMs,
-# which win on arithmetic throughput there. Env-tunable for A/B runs on
-# machines with different bandwidth/compute balance (read at import in every
-# Python worker, so it applies executor-side too).
-_PACKED_LEVEL_MIN_PARENTS = int(os.environ.get("LMW_PACKED_MIN_PARENTS", "256"))
+# which win on arithmetic throughput there.
+_PACKED_LEVEL_MIN_PARENTS = 256
 
 # Rows per descent chunk. The ±1 float32 chunk matrix is re-read once per tree
 # level, so it should fit the cache share of ONE WORKER — under 32 concurrent
@@ -224,10 +221,8 @@ _PACKED_LEVEL_MIN_PARENTS = int(os.environ.get("LMW_PACKED_MIN_PARENTS", "256"))
 # leaves): 1024 rows (16 MB float32) beats 4096 at EVERY parallelism level —
 # 1 worker 56.4k vs 41.0k sigs/s, 8 workers 224k vs 193k, 32 workers 435k vs
 # 254k — because the per-level re-reads and the level gathers stay
-# cache-resident instead of streaming through (shared) DRAM. Env-tunable for
-# A/B on machines with different core/cache balance (read at import in every
-# Python worker, so it applies executor-side too).
-_DESCEND_CHUNK = int(os.environ.get("LMW_DESCEND_CHUNK", "1024"))
+# cache-resident instead of streaming through (shared) DRAM.
+_DESCEND_CHUNK = 1024
 
 _HUGE = np.int64(1) << np.int64(60)
 
@@ -395,15 +390,6 @@ def _descend_core(
         d_level[dead] = sentinel
         cur, dists[:, li] = new_cur, d_level
     return cur, dists
-
-
-def _descend_from_pm(
-    tree: CentroidTree, bits_pm: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """Pure-GEMM descent over ±1 float32 rows (compat shim for tests: packs the
-    rows back to feed the adaptive core's packed levels)."""
-    bits = (bits_pm > 0).astype(np.uint8)
-    return _descend_core(tree, pack_bits(bits), _rows01_from_bits(bits))
 
 
 # ---------------------------------------------------------------------------

@@ -4,12 +4,12 @@
       → signatures        (decode once; SimHash/sig/MinHash; bytes dropped)
       → candidate edges   (MinHash bands ∪ phash/simhash pigeonhole ∪ L-gram substring)
       → verified pairs    (JVM-side Hamming / MinHash-agreement thresholds)
-      → dup groups        (connected components, hash-to-min)
+      → dup groups        (connected components, min-label propagation)
       → EM-tree fit       (TSVQ-seeded, distributed EM iterations)
       → assignments       (leaf cluster_id + distance + dup_group per image)
 
-Each stage checkpoints (parquet/Iceberg) with per-partition lineage metrics and is
-skipped on resume when complete. The tree itself is checkpointed as rows
+Each stage checkpoints (parquet) with per-file row counts in ``_metrics.json`` and
+is skipped on resume when complete. The tree itself is checkpointed as rows
 (FIXTURES.md §4 schema) so a restart continues from the fitted tree.
 
 With a checkpoint dir, candidate generation and verify run in

@@ -1,4 +1,8 @@
-"""Connected-components tests (hash-to-min label propagation)."""
+"""Connected-components tests (min-label propagation with pointer jumping)."""
+
+import random
+
+import pytest
 
 from lmw_tree_spark.operators.ccomp import connected_components
 
@@ -11,15 +15,61 @@ def test_simple_components(spark):
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
 
-def test_chain_converges(spark):
-    # long path graph — worst case for propagation depth
-    n = 40
+def _union_find(edges, vertices=()):
+    parent = {v: v for v in vertices}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+@pytest.mark.parametrize("order", ["sorted", "shuffled"])
+def test_chain_converges(spark, order):
+    # long path graph — worst case for propagation depth; shuffled ids take
+    # more rounds than a round cap of 25 allowed, and a round-over-round size
+    # estimate would overflow (or exhaust the driver planning it)
+    n = 300
+    ids = [f"v{i:03d}" for i in range(n)]
+    if order == "shuffled":
+        random.Random(7).shuffle(ids)
     edges = spark.createDataFrame(
-        [(f"v{i:03d}", f"v{i+1:03d}") for i in range(n - 1)], "src string, dst string"
+        list(zip(ids, ids[1:])), "src string, dst string"
     )
-    got = connected_components(edges).collect()
+    out = connected_components(edges)
+    got = out.collect()
     assert {r["dup_group"] for r in got} == {"v000"}
     assert len(got) == n
+    assert out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() < 2**63
+
+
+def test_star_path_and_isolated_match_union_find(spark):
+    """Long ids: a star whose hub is its largest id, a shuffled path, a path
+    with a star hanging off its middle, and isolated vertices."""
+    rng = random.Random(3)
+    edges = [(120, leaf) for leaf in range(100, 120)]
+    path = list(range(200, 240))
+    rng.shuffle(path)
+    edges += list(zip(path, path[1:]))
+    edges += [(i, i + 1) for i in range(300, 320)] + [(310, j) for j in range(330, 336)]
+    isolated = [5, 400, 401]
+    verts = sorted({v for e in edges for v in e} | set(isolated))
+    got = {
+        r["image_id"]: r["dup_group"]
+        for r in connected_components(
+            spark.createDataFrame(edges, "src long, dst long"),
+            spark.createDataFrame([(v,) for v in verts], "image_id long"),
+        ).collect()
+    }
+    assert got == _union_find(edges, verts)
+    assert {got[v] for v in isolated} == set(isolated)
 
 
 def test_singletons_from_vertex_universe(spark):

@@ -125,18 +125,13 @@ def test_descend_small_and_blas_paths_agree():
     import numpy as np
 
     from lmw_tree_spark.functions.bitops import unpack_bits
-    from lmw_tree_spark.operators.tree import (
-        _descend_from_pm,
-        _descend_small,
-        tsvq_init,
-    )
+    from lmw_tree_spark.operators.tree import _descend_core, _descend_small, tsvq_init
 
     rng = np.random.default_rng(77)
     sigs = rng.integers(0, 2**63, (600, 8), dtype=np.uint64)
     tree = tsvq_init(sigs[:300], 5, 3, 1, 9)
     small_pos, small_d = _descend_small(tree, sigs)
-    pm = unpack_bits(sigs).astype(np.float32) * 2.0 - 1.0
-    blas_pos, blas_d = _descend_from_pm(tree, pm)
+    blas_pos, blas_d = _descend_core(tree, sigs, unpack_bits(sigs).astype(np.float32))
     np.testing.assert_array_equal(small_pos, blas_pos)
     np.testing.assert_array_equal(small_d, blas_d)
 

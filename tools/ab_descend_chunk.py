@@ -2,7 +2,7 @@
 
 Forks W worker processes that each run `accumulate_leaves` over N/W synthetic
 4096-bit signatures at the flagship tree geometry, and reports aggregate
-sigs/sec per candidate `LMW_DESCEND_CHUNK`. The single-core optimum (4096 rows
+sigs/sec per candidate descent chunk (`tree._DESCEND_CHUNK`). The single-core optimum (4096 rows
 = a 64 MB float32 chunk, fits this part's L3) is not obviously the parallel
 optimum: 32 workers share that L3, so each worker's cache share is ~L3/32 and
 a smaller chunk may keep the per-level re-reads cache-resident instead of
