@@ -2171,10 +2171,10 @@ def q_minibatch_emtree(spark, sf_dir):
     after each deterministic hash slice within a pass; the differently-fitted
     tree gets its own exchange + descent oracle."""
     from lmw_tree_spark.config import SMALL
-    from lmw_tree_spark.operators.emtree import assign, em_tree_fit_minibatch
+    from lmw_tree_spark.operators.emtree import assign, em_tree_fit
 
     sigs = _fixed_signatures(spark)
-    fit = em_tree_fit_minibatch(sigs, SMALL, n_batches=2)
+    fit = em_tree_fit(sigs, SMALL, n_batches=2)
     assert fit.tree.depth == 2, f"oracle SQL assumes depth 2, got {fit.tree.depth}"
     _write_exchange("minibatch", sigs=_sig_long(sigs), tree=_tree_long(fit.tree))
     return assign(sigs, fit.tree).orderBy("image_id")

@@ -142,11 +142,14 @@ def run_flagship(
 
 def run_em_iters(master: str, shuffle_partitions: int, n_rows: int, iters: int = 2) -> dict:
     """Distributed streaming-EM insert passes over synthetic 4096-bit signatures
-    (reference flagship geometry m=10 depth=4). Returns per-iteration seconds."""
+    (reference flagship geometry m=10 depth=4), through ``em_tree_fit``.
+    Returns per-iteration seconds."""
+    from dataclasses import replace
+
     import numpy as np
 
-    from lmw_tree_spark.operators import emtree
-    from lmw_tree_spark.operators.tree import tsvq_init, update_tree
+    from lmw_tree_spark.config import DEFAULT
+    from lmw_tree_spark.operators.emtree import em_tree_fit
     from lmw_tree_spark.session import get_spark
 
     spark = get_spark(
@@ -173,22 +176,12 @@ def run_em_iters(master: str, shuffle_partitions: int, n_rows: int, iters: int =
         )
         sigs.count()
 
-        rng = np.random.default_rng(0)
-        sample = rng.integers(0, 2**63, (2000, 64), dtype=np.uint64)
-        tree = tsvq_init(sample, 10, 4, 0, 42)
-
-        iter_secs = []
-        for _ in range(iters):
-            t0 = time.time()
-            bc = spark.sparkContext.broadcast(tree)
-            sums, counts, _sse = emtree._accumulate_pass(sigs, bc)
-            bc.unpersist()
-            tree = update_tree(tree, sums, counts)
-            iter_secs.append(round(time.time() - t0, 2))
+        fit = em_tree_fit(sigs, replace(DEFAULT, em_iters=iters))
+        iter_secs = [round(m["seconds"], 2) for m in fit.metrics]
         best = min(iter_secs)
         return {
             "rows": n_rows,
-            "leaves": tree.n_leaves,
+            "leaves": fit.tree.n_leaves,
             "iter_secs": iter_secs,
             "sigs_per_sec": round(n_rows / best, 0),
         }

@@ -23,6 +23,7 @@ since Spark 3.3) instead of crossing into Python.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -179,6 +180,22 @@ def longs_to_u64(arr) -> np.ndarray:
     """Series/list-of-lists of int64 words (from an array<long> column) → (N, W) uint64."""
     stacked = np.array(list(arr), dtype=np.int64)
     return stacked.view(np.uint64)
+
+
+def arrow_u64_matrix(col: pa.Array) -> np.ndarray:
+    """Arrow ``list<int64>`` column (one packed signature per row, all of equal
+    width) → (N, W) uint64 view of its values buffer.
+
+    Zero-copy: one ``frombuffer`` + reshape per batch instead of one small
+    ndarray object per row, so the view is read-only. Null or non-contiguous
+    values fall back to one copy."""
+    values = col.flatten()  # offset/slice-aware list values
+    n = len(col)
+    try:
+        flat = values.to_numpy(zero_copy_only=True)
+    except pa.ArrowInvalid:
+        flat = values.to_numpy(zero_copy_only=False)
+    return flat.view(np.uint64).reshape(n, len(values) // max(n, 1))
 
 
 # ---------------------------------------------------------------------------

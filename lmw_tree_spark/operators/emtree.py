@@ -6,14 +6,22 @@ Re-expression of the reference's flagship pipeline
     sample → TSVQ init (driver, NumPy — the sample is tiny, ref uses 2M of 733M)
     loop em_iters times:
         broadcast centroid tree (small) to executors
-        mapInPandas: per Arrow batch, descend tree + accumulate per-leaf
-            (bit_sums, count, sse)  ← map-side partial aggregation; one output row
-            per (partition-batch, touched leaf), NEVER per input row
-        groupBy(leaf).applyInPandas: sum partial accumulators → ≤ n_leaves rows
+        mapInArrow: per partition, descend tree + accumulate per-leaf
+            (bit_sums, count, sse)  ← map-side partial aggregation; one blob
+            per partition (touched leaves only), NEVER a row per input row
+        merge the blobs (on the driver, or first in a groupBy(merge_key) stage
+            above 64 partitions) → (L, B) totals
         driver: finalize majority prototypes, bottom-up rollup, prune empties
-    final pass: mapInPandas → per-level assignments (image_id, level, cluster_id,
+    final pass: mapInArrow → per-level assignments (image_id, level, cluster_id,
         distance) — the reference's ClusterWriter output
         (/root/reference/src/lmw/InsertVisitor.h:25-56) as a DataFrame.
+
+``em_tree_fit(sigs, cfg, n_batches)`` is the one fit driver: ``n_batches=1`` is
+the loop above, ``n_batches > 1`` the reference's mini-batch mode
+(StreamingEMTreeExperiments.h:143-189), which updates the centroids after every
+hash slice of each pass. Both the insert pass and the labeling pass read the
+packed ``sig`` column through one zero-copy Arrow reader
+(``bitops.arrow_u64_matrix``) and descend with ``tree.descend``.
 
 Scale notes (100 TB / 10^12 rows):
 - The only data-sized shuffles are the partial-accumulator groupBy — volume is
@@ -30,6 +38,9 @@ depth-1 special case and is exposed as ``kmeans_fit`` on the same machinery.
 
 from __future__ import annotations
 
+import pickle
+import time
+import zlib
 from collections.abc import Iterator
 from dataclasses import dataclass, field
 
@@ -39,7 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lmw_tree_spark.config import PipelineConfig
-from lmw_tree_spark.functions.bitops import longs_to_u64
+from lmw_tree_spark.functions.bitops import arrow_u64_matrix, longs_to_u64
 from lmw_tree_spark.operators.tree import (
     CentroidTree,
     accumulate_leaves,
@@ -76,6 +87,28 @@ def sample_signatures(sigs: DataFrame, n: int, seed: int) -> np.ndarray:
     return longs_to_u64([r["sig"] for r in rows])
 
 
+def _pack_acc(
+    sums: np.ndarray, counts: np.ndarray, sse: np.ndarray, dtype
+) -> bytes:
+    """The accumulator blob of the partition pass and the merge step: touched
+    leaf indices with their counts, SSE and bit sums (as ``dtype``), pickled
+    and zlib(1)-compressed — per-leaf bit counts are small integers, so the
+    high bytes are near-zero and compress 4-8x."""
+    touched = np.where(counts > 0)[0]
+    return zlib.compress(
+        pickle.dumps(
+            (
+                touched.astype(np.int32),
+                counts[touched],
+                sse[touched],
+                sums[touched].astype(dtype, copy=False),
+            ),
+            protocol=4,
+        ),
+        1,
+    )
+
+
 def _accumulate_pass(
     sigs: DataFrame,
     tree_bc,
@@ -95,24 +128,19 @@ def _accumulate_pass(
     extra (tiny) shuffle.
     """
 
-    import pickle
-    import zlib
-
     def partial(batches) -> Iterator:
         """Accumulate across the WHOLE partition, yield ONE compact binary blob —
         the Spark analogue of the reference's per-thread accumulators merged at
         pass end (StreamingEMTree.h:221-237). Transfer volume is
         O(partitions x touched_leaves x bits), independent of row count: counts
         travel at the narrowest safe width (uint16 when the partition holds
-        < 65536 rows) and zlib(1)-compressed — per-leaf bit counts are small
-        integers, so the high bytes are near-zero and compress 4-8x.
+        < 65536 rows), compressed (``_pack_acc``).
 
         Runs under ``mapInArrow``: the packed-signature matrix is a zero-copy
-        view of the Arrow list<int64> values buffer (one ``frombuffer`` +
-        reshape per batch) instead of pandas materializing one small ndarray
-        object PER ROW — at 2M rows/iteration the object churn alone was a
-        measurable slice of the insert pass. The view is read-only; every
-        kernel below only gathers from it.
+        view of the Arrow values buffer (``arrow_u64_matrix``) instead of
+        pandas materializing one small ndarray object PER ROW — at 2M
+        rows/iteration the object churn alone was a measurable slice of the
+        insert pass.
 
         Batch views are BUFFERED and accumulated once per ~1M rows rather than
         once per ~10k-row Arrow batch: ``accumulate_leaves``'s pass B streams
@@ -145,16 +173,8 @@ def _accumulate_pass(
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            col = rb.column(0)
-            values = col.flatten()          # offset/slice-aware list values
-            w = len(values) // rb.num_rows
-            try:
-                flat = values.to_numpy(zero_copy_only=True)
-            except pa.ArrowInvalid:         # nulls/non-contiguous: copy path
-                flat = values.to_numpy(zero_copy_only=False)
-            s = flat.view(np.uint64).reshape(rb.num_rows, w)
             n_rows += rb.num_rows
-            views.append(s)
+            views.append(arrow_u64_matrix(rb.column(0)))
             buf_rows += rb.num_rows
             if buf_rows >= flush_rows:
                 flush()
@@ -162,20 +182,8 @@ def _accumulate_pass(
         if totals is None:
             return
         total_sums, total_counts, total_sse = totals
-        touched = np.where(total_counts > 0)[0]
         dtype = np.uint16 if n_rows < (1 << 16) else np.uint32
-        payload = zlib.compress(
-            pickle.dumps(
-                (
-                    touched.astype(np.int32),
-                    total_counts[touched],
-                    total_sse[touched],
-                    total_sums[touched].astype(dtype),
-                ),
-                protocol=4,
-            ),
-            1,
-        )
+        payload = _pack_acc(total_sums, total_counts, total_sse, dtype)
         ctx = TaskContext.get()
         key = (ctx.partitionId() if ctx is not None else 0) % combine_keys
         yield pa.RecordBatch.from_pydict(
@@ -231,20 +239,8 @@ def _accumulate_pass(
     if n_parts > combine_threshold:
 
         def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-            sums, counts, sse = _combine_blobs(pdf["payload"])
-            touched = np.where(counts > 0)[0]
-            payload = zlib.compress(
-                pickle.dumps(
-                    (
-                        touched.astype(np.int32),
-                        counts[touched],
-                        sse[touched],
-                        sums[touched],  # int64: merged counts can exceed uint32
-                    ),
-                    protocol=4,
-                ),
-                1,
-            )
+            # int64 sums: merged counts can exceed uint32
+            payload = _pack_acc(*_combine_blobs(pdf["payload"]), np.int64)
             return pd.DataFrame({"payload": [payload]})
 
         blob_df = blob_df.groupBy("merge_key").applyInPandas(merge, ACC_SCHEMA)
@@ -255,71 +251,72 @@ def _accumulate_pass(
     return _combine_blobs(pdf["payload"])
 
 
-def em_tree_fit(sigs: DataFrame, cfg: PipelineConfig) -> FitResult:
-    """Fit the EM-tree: TSVQ-seeded init + cfg.em_iters distributed EM iterations."""
-    spark = sigs.sparkSession
+def em_tree_fit(sigs: DataFrame, cfg: PipelineConfig, n_batches: int = 1) -> FitResult:
+    """Fit the EM-tree: TSVQ-seeded init + cfg.em_iters distributed EM passes.
+
+    ``n_batches == 1`` is the full-batch mode
+    (/root/reference/src/StreamingEMTreeExperiments.h:115-141): one insert pass
+    over all rows, then one centroid update. ``n_batches > 1`` is the
+    reference's mini-batch mode (StreamingEMTreeExperiments.h:143-189): each
+    pass slices the input into ``n_batches`` deterministic hash slices; after
+    every slice the centroids are updated from the CUMULATIVE accumulators
+    (cleared only at the end of a full pass), realigned to the pruned leaf set.
+    Centroids improve mid-pass, so fewer full passes are needed — the trade
+    the reference makes with batchSize=100000.
+
+    ``metrics`` holds one entry per pass: ``rmse``, ``objects`` (rows
+    inserted — the object-count conservation check), ``leaves``, per-level
+    node counts ``levels`` and the pass's wall ``seconds``.
+    """
     sample = sample_signatures(sigs, cfg.tsvq_sample, cfg.seed)
     tree = tsvq_init(sample, cfg.tree_order, cfg.tree_depth, cfg.tsvq_maxiters, cfg.seed)
-    result = FitResult(tree=tree)
-    for it in range(cfg.em_iters):
-        bc = spark.sparkContext.broadcast(tree)
-        sums, counts, sse = _accumulate_pass(sigs, bc)
-        bc.unpersist()
-        total = int(counts.sum())
-        rmse = float(np.sqrt(sse.sum() / max(total, 1)))
-        tree = update_tree(tree, sums, counts)
-        result.metrics.append(
-            {
-                "iteration": it,
-                "rmse": rmse,
-                "objects": total,  # object-count conservation check
-                "leaves": tree.n_leaves,
-                "levels": [len(lv.node_id) for lv in tree.levels],
-            }
-        )
-    result.tree = tree
-    return result
+    return _em_passes(sigs, tree, cfg, n_batches)
 
 
-def em_tree_fit_minibatch(
-    sigs: DataFrame, cfg: PipelineConfig, n_batches: int = 4
+def _em_passes(
+    sigs: DataFrame, tree: CentroidTree, cfg: PipelineConfig, n_batches: int = 1
 ) -> FitResult:
-    """Mini-batch streaming EM (reference mode,
-    /root/reference/src/StreamingEMTreeExperiments.h:143-189): each pass slices
-    the input into ``n_batches`` deterministic hash slices; after every slice the
-    centroids are updated from the CUMULATIVE accumulators (cleared only at the
-    end of a full pass). Centroids improve mid-pass, so fewer full passes are
-    needed — the trade the reference makes with batchSize=100000."""
+    """The EM passes of ``em_tree_fit`` from a given seed tree (``ktree_fit``
+    seeds with a K-tree instead of TSVQ)."""
     spark = sigs.sparkSession
-    sample = sample_signatures(sigs, cfg.tsvq_sample, cfg.seed)
-    tree = tsvq_init(sample, cfg.tree_order, cfg.tree_depth, cfg.tsvq_maxiters, cfg.seed)
     result = FitResult(tree=tree)
-    slice_col = F.pmod(F.xxhash64("image_id", F.lit(cfg.seed + 1)), F.lit(n_batches))
-    sliced = sigs.withColumn("_slice", slice_col)
+    if n_batches > 1:
+        slice_col = F.pmod(F.xxhash64("image_id", F.lit(cfg.seed + 1)), F.lit(n_batches))
+        sliced = sigs.withColumn("_slice", slice_col)
+        batches = [sliced.where(F.col("_slice") == b) for b in range(n_batches)]
+    else:
+        batches = [sigs]
     for it in range(cfg.em_iters):
+        t0 = time.perf_counter()
         cum: list[np.ndarray] | None = None  # aligned to the CURRENT tree's leaves
-        total = 0
-        for b in range(n_batches):
+        for batch in batches:
             bc = spark.sparkContext.broadcast(tree)
-            sums, counts, sse = _accumulate_pass(sliced.where(F.col("_slice") == b), bc)
+            sums, counts, sse = _accumulate_pass(batch, bc)
             bc.unpersist()
             if cum is None:
-                cum = [sums, counts, sse.copy()]
+                cum = [sums, counts, sse]
             else:
                 cum[0] += sums
                 cum[1] += counts
                 cum[2] += sse
-            total += int(counts.sum())
             old_ids = tree.leaf_ids()
             tree = update_tree(tree, cum[0], cum[1])
-            # re-align cumulative rows to the (possibly pruned) new leaf set;
-            # pruned leaves had zero cumulative count, so nothing is lost
-            pos = {int(i): k for k, i in enumerate(old_ids)}
-            take = np.array([pos[int(i)] for i in tree.leaf_ids()], dtype=np.int64)
-            cum = [cum[0][take], cum[1][take], cum[2][take]]
-        rmse = float(np.sqrt(cum[2].sum() / max(total, 1)))
+            if n_batches > 1:
+                # re-align cumulative rows to the (possibly pruned) new leaf
+                # set; pruned leaves had zero cumulative count, so nothing is lost
+                pos = {int(i): k for k, i in enumerate(old_ids)}
+                take = np.array([pos[int(i)] for i in tree.leaf_ids()], dtype=np.int64)
+                cum = [cum[0][take], cum[1][take], cum[2][take]]
+        total = int(cum[1].sum())
         result.metrics.append(
-            {"iteration": it, "rmse": rmse, "objects": total, "leaves": tree.n_leaves}
+            {
+                "iteration": it,
+                "rmse": float(np.sqrt(cum[2].sum() / max(total, 1))),
+                "objects": total,
+                "leaves": tree.n_leaves,
+                "levels": [len(lv.node_id) for lv in tree.levels],
+                "seconds": round(time.perf_counter() - t0, 3),
+            }
         )
     result.tree = tree
     return result
@@ -329,12 +326,15 @@ def assign(sigs: DataFrame, tree: CentroidTree, per_level: bool = False) -> Data
     """Final labeling pass (reference `visit` + ClusterWriter): pure map, no shuffle.
 
     per_level=True emits one row per (row, level) like the reference's per-level CSVs;
-    default emits leaf assignments only.
+    default emits leaf assignments only. Runs under ``mapInArrow`` and reads
+    ``sig`` with the same zero-copy reader as the insert pass.
     """
     spark = sigs.sparkSession
     bc = spark.sparkContext.broadcast(tree)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches) -> Iterator:
+        import pyarrow as pa
+
         t: CentroidTree = bc.value
         # ancestor node_id at each level for every leaf, precomputed once per task
         anc = np.empty((t.n_leaves, t.depth), dtype=np.int64)
@@ -342,33 +342,34 @@ def assign(sigs: DataFrame, tree: CentroidTree, per_level: bool = False) -> Data
         for li in range(t.depth - 1, -1, -1):
             anc[:, li] = t.levels[li].node_id[cur]
             cur = t.levels[li].parent_idx[cur]
-        for pdf in batches:
-            if not len(pdf):
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            s = longs_to_u64(pdf["sig"])
-            leaf_pos, dists = descend(t, s)
-            ids = pdf["image_id"].to_numpy()
+            ids = rb.column(0)
+            leaf_pos, dists = descend(t, arrow_u64_matrix(rb.column(1)))
             if per_level:
-                n, d = len(ids), t.depth
-                yield pd.DataFrame(
-                    {
-                        "image_id": np.repeat(ids, d),
-                        "level": np.tile(np.arange(1, d + 1), n),
-                        "cluster_id": anc[leaf_pos].ravel(),
-                        "distance": dists.astype(np.float64).ravel(),
-                    }
+                n, d = rb.num_rows, t.depth
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        ids.take(np.repeat(np.arange(n), d)),
+                        pa.array(np.tile(np.arange(1, d + 1, dtype=np.int32), n)),
+                        pa.array(anc[leaf_pos].ravel()),
+                        pa.array(dists.astype(np.float64).ravel()),
+                    ],
+                    names=["image_id", "level", "cluster_id", "distance"],
                 )
             else:
-                yield pd.DataFrame(
-                    {
-                        "image_id": ids,
-                        "cluster_id": t.leaf_ids()[leaf_pos],
-                        "distance": dists[:, -1].astype(np.float64),
-                    }
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        ids,
+                        pa.array(t.leaf_ids()[leaf_pos]),
+                        pa.array(dists[:, -1].astype(np.float64)),
+                    ],
+                    names=["image_id", "cluster_id", "distance"],
                 )
 
     schema = ASSIGN_SCHEMA if per_level else LEAF_ASSIGN_SCHEMA
-    return sigs.select("image_id", "sig").mapInPandas(run, schema)
+    return sigs.select("image_id", "sig").mapInArrow(run, schema)
 
 
 def cluster_stats(assignments: DataFrame) -> DataFrame:

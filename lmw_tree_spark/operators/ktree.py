@@ -312,21 +312,4 @@ def ktree_fit(
     kt.add_all(sample)
     if rearrange:
         kt.rearrange()
-    tree = kt.to_centroid_tree()
-
-    spark = sigs.sparkSession
-    result = FitResult(tree=tree)
-    for it in range(cfg.em_iters):
-        bc = spark.sparkContext.broadcast(tree)
-        sums, counts, sse = emtree._accumulate_pass(sigs, bc)
-        bc.unpersist()
-        total = int(counts.sum())
-        rmse = float(np.sqrt(sse.sum() / max(total, 1)))
-        from lmw_tree_spark.operators.tree import update_tree
-
-        tree = update_tree(tree, sums, counts)
-        result.metrics.append(
-            {"iteration": it, "rmse": rmse, "objects": total, "leaves": tree.n_leaves}
-        )
-    result.tree = tree
-    return result
+    return emtree._em_passes(sigs, kt.to_centroid_tree(), cfg)

@@ -169,12 +169,14 @@ def edges_from_buckets(
 
     The plan fans out over ``buckets`` FOUR ways (level-1 chains, per-salt
     reps, bucket counts, clique join) — without materialization every consumer
-    re-runs the upstream bucket generators (four Arrow mapInPandas passes over
-    the signature table in the image pipeline: measured 4-8x the warm cost of
-    the stage at bench scale). ``agg1`` below is therefore persisted
-    MEMORY_AND_DISK before the fan-out: one materialization, spill-backed so a
-    100 TB run (~tens of keys per row) degrades to local-disk reads instead of
-    OOM. :func:`release_salt_groups` drops it once the edges are written.
+    re-runs the upstream bucket generator in Python. Measured on 2,800
+    generated images (4096-bit signatures): 314,138 bucket rows through Python
+    per checkpointed pipeline build without the cache vs 157,069 with it (2×),
+    and 628,276 vs 157,069 per fused run (4×). ``agg1`` below is therefore
+    persisted MEMORY_AND_DISK before the fan-out: one materialization,
+    spill-backed so a 100 TB run (~tens of keys per row) degrades to
+    local-disk reads instead of OOM. :func:`release_salt_groups` drops it once the edges are consumed;
+    ``run_pipeline`` does so after the dup groups in every mode.
 
     Chain edges give O(n)-per-bucket connectivity regardless of skew; clique edges
     (bucket size ≤ pair_cap) add direct pairs for verification recall.

@@ -163,48 +163,37 @@ def _level_pads(tree: CentroidTree) -> list:
     return pads
 
 
-def _rows01_from_bits(bits_u8: np.ndarray) -> np.ndarray:
-    """Unpacked bits as 0/1 float32 GEMM rows (see ``_level_pads`` algebra)."""
-    return bits_u8.astype(np.float32)
-
-
-def descend(
-    tree: CentroidTree, sigs: np.ndarray, row_chunk: int | None = None
-) -> tuple[np.ndarray, np.ndarray]:
+def descend(tree: CentroidTree, sigs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Assign each row to a leaf by nearest-child descent.
 
     Returns (leaf_pos (N,) int64 index into the leaf level, per_level_dist
     (N, depth) int64). Distances run on BLAS: with ±1-unpacked bits,
     ``hamming(a, b) = (B - a·b) / 2`` exactly (dot products ≤ 4096 are exact in
     float32), so level 0 is one GEMM against all roots and each deeper level is a
-    per-parent-group GEMM against that parent's ≤ m children — the reference's
+    per-parent-group GEMM against that parent's ≤ m children, or the packed
+    kernel on many-parent levels (``_descend_core``) — the reference's
     nearest-child pointer descent (Optimizer.h:91-104) as batched matmuls.
     First-wins argmin tie-breaking matches the reference's sequential scan.
-    Rows are chunked so the ±1 float32 chunk (row_chunk × B × 4 B = 16 MB at
-    4096 bits with the default 1024) stays cache-resident across all depth
-    levels — each level re-reads the whole chunk matrix plus one gathered
-    copy, so cache residency beats the bigger-GEMM amortization of larger
-    chunks at every parallelism level (sweep in ``_DESCEND_CHUNK``'s comment;
-    tools/ab_descend_chunk.py reproduces it).
+    Rows are chunked so the 0/1 float32 chunk (``_DESCEND_CHUNK`` × B × 4 B =
+    16 MB at 4096 bits) stays cache-resident across all depth levels — each
+    level re-reads the whole chunk matrix plus one gathered copy, so cache
+    residency beats the bigger-GEMM amortization of larger chunks at every
+    parallelism level (sweep in ``_DESCEND_CHUNK``'s comment;
+    ``tools/profile_kernels.py --chunks`` reproduces it). Every batch size
+    takes this one path: a small batch is one short chunk, whose per-level pads
+    are built once per tree instance and reused.
     """
     n = sigs.shape[0]
-    if row_chunk is None:
-        row_chunk = _DESCEND_CHUNK
-    if n < _SMALL_BATCH:
-        return _descend_small(tree, sigs)
-    if n > row_chunk:
-        parts = [
-            descend(tree, sigs[lo : lo + row_chunk], row_chunk)
-            for lo in range(0, n, row_chunk)
-        ]
-        return (
-            np.concatenate([p[0] for p in parts]),
-            np.concatenate([p[1] for p in parts]),
+    leaf_pos = np.empty(n, dtype=np.int64)
+    dists = np.empty((n, tree.depth), dtype=np.int64)
+    for lo in range(0, n, _DESCEND_CHUNK):
+        chunk = sigs[lo : lo + _DESCEND_CHUNK]
+        rows01 = unpack_bits(chunk).astype(np.float32)  # 0/1 GEMM rows (_level_pads)
+        leaf_pos[lo : lo + _DESCEND_CHUNK], dists[lo : lo + _DESCEND_CHUNK] = (
+            _descend_core(tree, chunk, rows01)
         )
-    return _descend_core(tree, sigs, _rows01_from_bits(unpack_bits(sigs)))
+    return leaf_pos, dists
 
-
-_SMALL_BATCH = 512
 
 # A level is processed in the packed domain (fanout-bucketed XOR + SWAR
 # popcount) once it has at least this many parents: many parents ⇒ tiny
@@ -214,14 +203,15 @@ _SMALL_BATCH = 512
 # which win on arithmetic throughput there.
 _PACKED_LEVEL_MIN_PARENTS = 256
 
-# Rows per descent chunk. The ±1 float32 chunk matrix is re-read once per tree
+# Rows per descent chunk. The 0/1 float32 chunk matrix is re-read once per tree
 # level, so it should fit the cache share of ONE WORKER — under 32 concurrent
-# workers sharing one L3, that share is L3/32, not L3. Swept with
-# tools/ab_descend_chunk.py at the flagship geometry (2M×4096-bit, ~2k
-# leaves): 1024 rows (16 MB float32) beats 4096 at EVERY parallelism level —
-# 1 worker 56.4k vs 41.0k sigs/s, 8 workers 224k vs 193k, 32 workers 435k vs
-# 254k — because the per-level re-reads and the level gathers stay
-# cache-resident instead of streaming through (shared) DRAM.
+# workers sharing one L3, that share is L3/32, not L3. Swept at the flagship
+# geometry (2M×4096-bit, ~2k leaves; rerun with
+# ``tools/profile_kernels.py --workers W --chunks 1024,4096``): 1024 rows
+# (16 MB float32) beats 4096 at EVERY parallelism level — 1 worker 56.4k vs
+# 41.0k sigs/s, 8 workers 224k vs 193k, 32 workers 435k vs 254k — because the
+# per-level re-reads and the level gathers stay cache-resident instead of
+# streaming through (shared) DRAM.
 _DESCEND_CHUNK = 1024
 
 _HUGE = np.int64(1) << np.int64(60)
@@ -257,43 +247,6 @@ def _packed_pads(tree: CentroidTree) -> list:
         pads.append((cent_pad, idx_pad, n_kids))
     tree.__dict__["_ppads"] = pads
     return pads
-
-
-def _descend_small(tree: CentroidTree, sigs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Packed-domain descent for small batches: per-parent LUT-popcount argmin
-    directly on the packed uint64 centroids. Skips the ±1 float expansion AND the
-    per-level pad tensors — for a few hundred rows the pads cost (tens of MB of
-    fresh buffers per worker) far exceeds the distance work. Identical results
-    and tie-breaking to the BLAS path (both are exact Hamming, first-wins)."""
-    n = sigs.shape[0]
-    dists = np.empty((n, tree.depth), dtype=np.int64)
-    idx, d = hamming_argmin(sigs, tree.levels[0].centroid)
-    cur = idx.astype(np.int64)
-    dists[:, 0] = d
-    sentinel = np.iinfo(np.int64).max
-    for li in range(1, tree.depth):
-        lv = tree.levels[li]
-        n_parents = len(tree.levels[li - 1].node_id)
-        child_order = np.argsort(lv.parent_idx, kind="stable")
-        child_bounds = np.searchsorted(lv.parent_idx[child_order], np.arange(n_parents + 1))
-        new_cur = np.full(n, -1, dtype=np.int64)
-        new_d = np.full(n, sentinel, dtype=np.int64)
-        order = np.argsort(cur, kind="stable")
-        sorted_cur = cur[order]
-        lo = np.searchsorted(sorted_cur, 0)
-        present = np.unique(sorted_cur[lo:])
-        bounds = np.searchsorted(sorted_cur, present)
-        bounds = np.append(bounds, n)
-        for k, p in enumerate(present):
-            rows = order[bounds[k] : bounds[k + 1]]
-            kids = child_order[child_bounds[p] : child_bounds[p + 1]]
-            if len(kids) == 0:
-                continue
-            local_idx, local_d = hamming_argmin(sigs[rows], lv.centroid[kids])
-            new_cur[rows] = kids[local_idx]
-            new_d[rows] = local_d
-        cur, dists[:, li] = new_cur, new_d
-    return cur, dists
 
 
 def _level_packed_bucketed(
@@ -404,8 +357,9 @@ def accumulate_leaves(
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """One insert pass over a batch: (bit_sums (L, B) int64, counts (L,), sse (L,)).
 
-    Two passes. Pass A descends every row in cache-sized chunks (the ±1
-    float32 chunk is re-read once per tree level, so it must fit L3). Pass B
+    Two passes. Pass A is ``descend`` over the whole batch (it chunks the rows
+    to ``_DESCEND_CHUNK`` so each 0/1 float32 chunk stays cache-resident
+    across the tree levels; ``tools/profile_kernels.py`` times both). Pass B
     sorts the WHOLE batch by leaf once and segment-sums the unpacked bits in
     leaf order — each leaf's (B,) int64 row in ``sums`` is then written by ~one
     reduction instead of once per chunk; the per-chunk variant re-streamed up
@@ -427,21 +381,10 @@ def accumulate_leaves(
         sse = np.zeros(n_leaves, dtype=np.float64)
     else:
         sums, counts, sse = out
-    chunk = _DESCEND_CHUNK  # ±1 float32 chunk cache-resident across levels (see descend)
 
     # Pass A: leaf assignment + leaf distance for every row.
-    leaf_pos = np.empty(n, dtype=np.int64)
-    leaf_d = np.empty(n, dtype=np.int64)
-    for lo in range(0, n, chunk):
-        chunk_sigs = sigs[lo : lo + chunk]
-        if len(chunk_sigs) < _SMALL_BATCH:
-            lp, dists = _descend_small(tree, chunk_sigs)
-        else:
-            lp, dists = _descend_core(
-                tree, chunk_sigs, _rows01_from_bits(unpack_bits(chunk_sigs))
-            )
-        leaf_pos[lo : lo + chunk] = lp
-        leaf_d[lo : lo + chunk] = dists[:, -1]
+    leaf_pos, dists = descend(tree, sigs)
+    leaf_d = dists[:, -1]
 
     counts += np.bincount(leaf_pos, minlength=n_leaves)
     fd = leaf_d.astype(np.float64)
@@ -450,6 +393,7 @@ def accumulate_leaves(
     # Pass B: one global leaf-order sort, then chunked segment sums. A leaf
     # spanning a chunk boundary just gets two += into its row.
     order = np.argsort(leaf_pos, kind="stable")
+    chunk = _DESCEND_CHUNK
     for lo in range(0, n, chunk):
         rows = order[lo : lo + chunk]
         sorted_bits = unpack_bits(sigs[rows])

@@ -89,12 +89,18 @@ def run_pipeline(
         else max(1, ckpt.metrics("signatures")["rows"] // ROWS_PER_SLICE)
     )
 
+    buckets = None  # the unsliced build's bucket table, once built
+
     def build_verified() -> DataFrame:
+        nonlocal buckets
         if n_slices > 1:
             edges = _sliced_verified(staged, ckpt, sigs, cfg, n_slices)
         else:
+            buckets = lsh.candidate_buckets(sigs, cfg)
             edges = lsh.verify_edges(
-                lsh.candidate_edges(sigs, cfg), sigs, cfg
+                lsh.edges_from_buckets(buckets, cfg.bucket_pair_cap, cfg.chain_salts),
+                sigs,
+                cfg,
             ).where("is_dup")
         if cfg.suffix_dup_min_len is not None:
             # exact suffix-array substring pass on captions (operators/suffix.py):
@@ -135,6 +141,14 @@ def run_pipeline(
         return connected_components(edges, vertices=sigs)
 
     groups = staged("dup_groups", build_groups)
+    # the groups no longer read the edges: drop the persisted (bucket, salt)
+    # aggregation and, in a fused run, the verified edges (the groups' labels
+    # are checkpointed); a later run over the same input must not be served
+    # from either
+    if buckets is not None:
+        lsh.release_salt_groups(buckets, cfg.chain_salts)
+    if ckpt is None:
+        verified.unpersist()
 
     # EM-tree fit: resume from a checkpointed tree when present
     metrics: list[dict] = []

@@ -7,7 +7,7 @@ import pandas as pd
 
 from lmw_tree_spark.config import SMALL
 from lmw_tree_spark.functions.bitops import pack_bits, unpack_bits
-from lmw_tree_spark.operators.emtree import em_tree_fit, em_tree_fit_minibatch
+from lmw_tree_spark.operators.emtree import em_tree_fit
 
 
 def _planted_df(spark, n_clusters=5, per=60, words=4, flip=0.04, seed=21):
@@ -30,7 +30,7 @@ def _planted_df(spark, n_clusters=5, per=60, words=4, flip=0.04, seed=21):
 
 def test_minibatch_conserves_objects_and_descends_rmse(spark):
     df = _planted_df(spark).persist()
-    fit = em_tree_fit_minibatch(df, SMALL, n_batches=3)
+    fit = em_tree_fit(df, SMALL, n_batches=3)
     n = df.count()
     assert all(m["objects"] == n for m in fit.metrics)
     # per-pass RMSE mixes mid-pass centroid versions (accumulators are cumulative
@@ -45,6 +45,6 @@ def test_minibatch_conserves_objects_and_descends_rmse(spark):
 def test_minibatch_comparable_quality_to_full_batch(spark):
     df = _planted_df(spark).persist()
     full = em_tree_fit(df, SMALL)
-    mini = em_tree_fit_minibatch(df, SMALL, n_batches=3)
+    mini = em_tree_fit(df, SMALL, n_batches=3)
     # mini-batch converges to comparable RMSE (within 15%) in the same passes
     assert mini.metrics[-1]["rmse"] <= full.metrics[-1]["rmse"] * 1.15

@@ -211,18 +211,41 @@ def test_snapshot_diff_cdc(spark, tmpdir_ck):
     assert snapshot_diff(ck, "corpus", vs[0], vs[0], "doc_id").count() == 0
 
 
-def test_pipeline_partitioning_invariance(spark):
+def test_pipeline_partitioning_invariance(spark, monkeypatch):
     """The WHOLE flagship pipeline is partitioning-invariant: the same logical
     input at 2 partitions and at 13 hash-shuffled partitions yields identical
     dup groups and cluster assignments. This is the single strongest
     cluster-scale determinism statement — every stage (signatures, candidate
     buckets, verify, connected components, EM fit, assignment) must be free of
-    partition-order dependence for it to hold."""
+    partition-order dependence for it to hold.
+
+    Each fused run releases its (bucket, salt) aggregation and its verified
+    edges, so the second run is not served from the first one's caches; the
+    signatures it returns stay cached for the caller."""
+    from pyspark import StorageLevel
+
+    from lmw_tree_spark.operators import lsh
+    from lmw_tree_spark.plans import pipeline
+
+    edge_calls = _count_calls(monkeypatch, lsh, "edges_from_buckets")
+    cc_calls = _count_calls(monkeypatch, pipeline, "connected_components")
+
+    def fused(df):
+        res = run_pipeline(spark, df, SMALL)
+        out = res.assignments.toPandas()
+        buckets, verified = edge_calls[-1][0], cc_calls[-1][0]
+        assert (
+            lsh._salt_groups(buckets, SMALL.chain_salts).storageLevel
+            == StorageLevel.NONE
+        )
+        assert verified.storageLevel == StorageLevel.NONE
+        assert res.signatures.storageLevel != StorageLevel.NONE
+        res.signatures.unpersist()
+        return out
+
     images = generate_images(spark, 240, with_truth=True).drop("dup_group")
-    few = run_pipeline(spark, images.coalesce(2), SMALL).assignments.toPandas()
-    many = run_pipeline(
-        spark, images.repartition(13, "image_id"), SMALL
-    ).assignments.toPandas()
+    few = fused(images.coalesce(2))
+    many = fused(images.repartition(13, "image_id"))
     merged = few.merge(many, on="image_id", suffixes=("_a", "_b"))
     assert len(merged) == 240
     assert (merged["cluster_id_a"] == merged["cluster_id_b"]).all()
@@ -323,11 +346,17 @@ def _outputs(spark, ck_dir, res):
 
 @pytest.fixture(scope="module")
 def unsliced_run(spark, tmp_path_factory):
-    """One checkpointed run below ROWS_PER_SLICE: the unsliced reference."""
+    """One checkpointed run below ROWS_PER_SLICE: the unsliced reference, with
+    the bucket table its one ``edges_from_buckets`` call got."""
+    from lmw_tree_spark.operators import lsh
+
     images = generate_images(spark, SLICED_N)
     ck = str(tmp_path_factory.mktemp("unsliced"))
-    res = run_pipeline(spark, images, SMALL, checkpoint_dir=ck)
-    return images, _outputs(spark, ck, res)
+    with pytest.MonkeyPatch.context() as mp:
+        edge_calls = _count_calls(mp, lsh, "edges_from_buckets")
+        res = run_pipeline(spark, images, SMALL, checkpoint_dir=ck)
+    (buckets,) = [args[0] for args in edge_calls]
+    return images, _outputs(spark, ck, res), buckets
 
 
 def _count_calls(monkeypatch, owner, attr, before=None):
@@ -358,7 +387,12 @@ def test_sliced_pipeline_matches_unsliced(spark, tmp_path, monkeypatch, unsliced
     from lmw_tree_spark.operators import lsh
     from lmw_tree_spark.plans import pipeline
 
-    images, want = unsliced_run
+    images, want, unsliced_buckets = unsliced_run
+    # the unsliced build releases its aggregation too
+    assert (
+        lsh._salt_groups(unsliced_buckets, SMALL.chain_salts).storageLevel
+        == StorageLevel.NONE
+    )
     monkeypatch.setattr(pipeline, "ROWS_PER_SLICE", SLICED_N // 3)
     jsc = spark.sparkContext._jsc
     persisted = []
@@ -398,7 +432,7 @@ def test_sliced_pipeline_resumes_after_failed_verify_slice(
     from lmw_tree_spark.operators import lsh
     from lmw_tree_spark.plans import pipeline
 
-    images, want = unsliced_run
+    images, want, _ = unsliced_run
     monkeypatch.setattr(pipeline, "ROWS_PER_SLICE", SLICED_N // 3)
 
     def kill_second(n, *_args):

@@ -3,9 +3,11 @@
 serialization roundtrip."""
 
 import numpy as np
+import pytest
 
 from lmw_tree_spark.operators.tree import (
     CentroidTree,
+    Level,
     accumulate_leaves,
     descend,
     em_iterations_numpy,
@@ -119,21 +121,61 @@ def test_tsvq_deterministic(planted_signatures):
     )
 
 
-def test_descend_small_and_blas_paths_agree():
-    """The packed-LUT small-batch path and the BLAS path are the same function:
-    exact Hamming, first-wins ties."""
-    import numpy as np
+def _descend_reference(tree, sigs):
+    """Per-row nearest-child descent: at each level the current node's
+    children in level-array order, exact Hamming, first minimum wins."""
+    pos = np.empty(len(sigs), dtype=np.int64)
+    dists = np.empty((len(sigs), tree.depth), dtype=np.int64)
+    for r, row in enumerate(sigs):
+        cur = -1
+        for li, lv in enumerate(tree.levels):
+            kids = np.arange(len(lv.node_id)) if li == 0 else np.where(lv.parent_idx == cur)[0]
+            xor = np.bitwise_xor(lv.centroid[kids], row[None, :])
+            d = np.unpackbits(xor.view(np.uint8), axis=1).sum(axis=1)
+            j = int(np.argmin(d))
+            cur, dists[r, li] = int(kids[j]), int(d[j])
+        pos[r] = cur
+    return pos, dists
 
-    from lmw_tree_spark.functions.bitops import unpack_bits
-    from lmw_tree_spark.operators.tree import _descend_core, _descend_small, tsvq_init
 
-    rng = np.random.default_rng(77)
-    sigs = rng.integers(0, 2**63, (600, 8), dtype=np.uint64)
-    tree = tsvq_init(sigs[:300], 5, 3, 1, 9)
-    small_pos, small_d = _descend_small(tree, sigs)
-    blas_pos, blas_d = _descend_core(tree, sigs, unpack_bits(sigs).astype(np.float32))
-    np.testing.assert_array_equal(small_pos, blas_pos)
-    np.testing.assert_array_equal(small_d, blas_d)
+@pytest.mark.parametrize("n", [1, 511, 1025])
+def test_descend_matches_bruteforce_reference(n):
+    """``descend`` is exact first-wins Hamming descent on both level kernels
+    (BLAS on the 3-parent level, packed on the 300-parent level) and across
+    the ``_DESCEND_CHUNK`` boundary. 128-bit rows, planted duplicate sibling
+    centroids and rows equal to centroids make ties common."""
+    from lmw_tree_spark.operators import tree as T
+
+    rng = np.random.default_rng(5)
+    words = 2
+    roots = rng.integers(0, 2**63, (3, words), dtype=np.uint64)
+    roots[2] = roots[0]                              # tie at level 0
+    mid_parent = rng.permutation(np.arange(300) % 3)
+    mid = rng.integers(0, 2**63, (300, words), dtype=np.uint64)
+    fanout = 1 + np.arange(300) % 4
+    leaf_parent = rng.permutation(np.repeat(np.arange(300), fanout))
+    leaves = rng.integers(0, 2**63, (len(leaf_parent), words), dtype=np.uint64)
+    for p in np.where(fanout > 1)[0]:                # duplicate sibling pairs
+        kids = np.where(leaf_parent == p)[0]
+        leaves[kids[-1]] = leaves[kids[0]]
+    tree = CentroidTree(
+        order=4,
+        levels=[
+            Level(np.arange(3), np.full(3, -1), roots),
+            Level(np.arange(3, 303), mid_parent, mid),
+            Level(np.arange(303, 303 + len(leaves)), leaf_parent, leaves),
+        ],
+    )
+    assert len(tree.levels[0].node_id) < T._PACKED_LEVEL_MIN_PARENTS
+    assert len(tree.levels[1].node_id) >= T._PACKED_LEVEL_MIN_PARENTS
+    assert 1025 > T._DESCEND_CHUNK
+
+    sigs = rng.integers(0, 2**63, (n, words), dtype=np.uint64)
+    sigs[: n // 4] = leaves[rng.integers(0, len(leaves), n // 4)]
+    got_pos, got_d = descend(tree, sigs)
+    want_pos, want_d = _descend_reference(tree, sigs)
+    np.testing.assert_array_equal(got_pos, want_pos)
+    np.testing.assert_array_equal(got_d, want_d)
 
 
 def test_enforce_num_clusters_guarantees_k_nonempty(planted_signatures):
