@@ -156,6 +156,24 @@ def _descend_oracle(xname: str, depth: int, final: str) -> str:
     return "WITH " + ",\n".join(ctes) + "\n" + final
 
 
+_FIXTURES: dict = {}
+
+
+def _per_app(build):
+    """Memoize the fixture ``build(spark)`` per Spark application, so a
+    shared fixture is built once per session however many queries read it."""
+
+    def get(spark: SparkSession):
+        app = spark.sparkContext.applicationId
+        hit = _FIXTURES.get(build.__name__)
+        if hit is None or hit[0] != app:
+            hit = _FIXTURES[build.__name__] = (app, build(spark))
+        return hit[1]
+
+    return get
+
+
+@_per_app
 def _fixed_signatures(spark: SparkSession):
     """Fixed-size synthetic signatures for the exchange-backed clustering
     queries (input size must not depend on sf — see module comment)."""
@@ -164,6 +182,18 @@ def _fixed_signatures(spark: SparkSession):
     from lmw_tree_spark.sources.images import generate_images
 
     return extract_signatures(generate_images(spark, _X_N), SMALL).persist()
+
+
+@_per_app
+def _verified_edges(spark: SparkSession) -> DataFrame:
+    """The verified image near-dup edges (src, dst) of ``_fixed_signatures``
+    — LSH candidates → verify — the input of every image-graph query."""
+    from lmw_tree_spark.config import SMALL
+    from lmw_tree_spark.operators.lsh import candidate_edges, verify_edges
+
+    sigs = _fixed_signatures(spark)
+    verified = verify_edges(candidate_edges(sigs, SMALL), sigs, SMALL)
+    return verified.where("is_dup").select("src", "dst").localCheckpoint(eager=True)
 
 
 def _caption_docs(spark: SparkSession, n: int) -> DataFrame:
@@ -197,6 +227,50 @@ def _synthetic_embeddings(spark: SparkSession, n: int = 1000, d: int = 32) -> Da
             yield pd.DataFrame(rows, columns=["vec_id", "embedding"])
 
     return spark.range(0, n, 1, 8).mapInPandas(gen, "vec_id long, embedding array<double>")
+
+
+def _embeddings_exchange(
+    xname: str, emb: DataFrame, *forms: str, centroids=None, codebook=None, **tables
+) -> None:
+    """Write an embedding table to .oracle_exchange/<xname>/ in the listed
+    ``forms``: ``"embeddings"`` (vec_id, v list) and/or ``"emb_long"``
+    (vec_id, j, val). ``centroids`` (k, d) become (cell, v); a PQ
+    ``codebook`` (m, ksub, dsub) becomes long-format (m, code, jl, val); any
+    further pandas ``tables`` are written as they are."""
+    import numpy as np
+    import pandas as pd
+
+    pdf = emb.toPandas()
+    ids = pdf["vec_id"].to_numpy()
+    mat = np.array(list(pdf["embedding"]), dtype=np.float64)
+    if "embeddings" in forms:
+        tables["embeddings"] = pd.DataFrame(
+            {"vec_id": ids, "v": [list(map(float, v)) for v in mat]}
+        )
+    if "emb_long" in forms:
+        n, d = mat.shape
+        tables["emb_long"] = pd.DataFrame(
+            {
+                "vec_id": np.repeat(ids, d),
+                "j": np.tile(np.arange(d, dtype=np.int64), n),
+                "val": mat.ravel(),
+            }
+        )
+    if centroids is not None:
+        tables["centroids"] = pd.DataFrame(
+            {"cell": range(len(centroids)), "v": [list(map(float, c)) for c in centroids]}
+        )
+    if codebook is not None:
+        m, ksub, dsub = codebook.shape
+        tables["codebook"] = pd.DataFrame(
+            {
+                "m": np.repeat(np.arange(m, dtype=np.int64), ksub * dsub),
+                "code": np.tile(np.repeat(np.arange(ksub, dtype=np.int64), dsub), m),
+                "jl": np.tile(np.arange(dsub, dtype=np.int64), m * ksub),
+                "val": codebook.ravel(),
+            }
+        )
+    _write_exchange(xname, **tables)
 
 
 # ---------------------------------------------------------------------------
@@ -719,7 +793,7 @@ def q_semantic_dedup(spark, sf_dir):
     )
 
 
-def q_dbscan_embeddings(spark, sf_dir):
+def q_dbscan_embeddings(spark, sf_dir, *, min_cosine=0.35):
     """DBSCAN density clustering over the embedding column (Ester et al., KDD
     1996) — the density-family twin of the centroid clusterers: cosine ≥ 0.35
     eps-graph through the EXACT bounded ball-cover join, core iff ≥ 3
@@ -728,12 +802,14 @@ def q_dbscan_embeddings(spark, sf_dir):
     core neighbors, noise = -1. Unlike the centroid family it leaves outliers
     unlabeled instead of force-assigning them — the curation shape for
     unknown-cluster-count corpora. Deterministic at any parallelism (min-label
-    rules replace classic DBSCAN's scan-order border ties)."""
+    rules replace classic DBSCAN's scan-order border ties). The loose 0.35
+    eps gives a dense graph that exercises every branch; production runs the
+    sparse near-dup-tight eps."""
     from lmw_tree_spark.operators.density import dbscan_embeddings
 
     emb = _t(spark, sf_dir, "embeddings")
     return dbscan_embeddings(
-        emb, min_cosine=0.35, min_core_neighbors=3
+        emb, min_cosine=min_cosine, min_core_neighbors=3
     ).orderBy("vec_id")
 
 
@@ -823,23 +899,40 @@ def q_hll_distinct(spark, sf_dir):
     )
 
 
-def q_bpe_train(spark, sf_dir):
-    """Distributed BPE tokenizer training (operators/bpe.py) — 8 merge
-    iterations over the corpus word-frequency table: pair counting is a
-    pure-map explode + bounded groupBy, merge application a zero-shuffle
-    word-local fold (``aggregate`` HOF), the argmax a one-row collect per step
-    (the algorithm's sequential dependency — same driver-loop shape as
-    dense_kmeans). The oracle replays ALL 8 iterations in DuckDB with an
-    INDEPENDENT merge algebra (gaps-and-islands windows instead of a fold) —
-    the two-implementations cross-check pattern of scrub_pii."""
+def q_bpe_train(spark, sf_dir, *, n_merges=8, n_words=None):
+    """BPE tokenizer training (operators/bpe.py) — 8 merge iterations over
+    the corpus word-frequency table: one distributed word aggregation and
+    viability prune, then the merge loop on the driver (lazy-deletion
+    max-heap of pair counts). The oracle replays ALL 8 iterations in DuckDB
+    with an INDEPENDENT merge algebra (gaps-and-islands windows) — the
+    two-implementations cross-check pattern of scrub_pii. ``n_words``
+    trains on that many distinct synthetic words instead (a vocabulary-scale
+    table the sf documents, ~31 distinct words, cannot give)."""
     from lmw_tree_spark.operators.bpe import bpe_train
 
-    docs = _t(spark, sf_dir, "documents")
-    merges, words = bpe_train(docs, n_merges=8)
+    if n_words is None:
+        docs = _t(spark, sf_dir, "documents")
+    else:
+        docs = _synthetic_words(spark, n_words)
+    merges, words = bpe_train(docs, n_merges=n_merges)
     words.unpersist()
     return spark.createDataFrame(
         merges, "step int, left string, right string, merged string, cnt long"
     ).orderBy("step")
+
+
+def _synthetic_words(spark: SparkSession, n: int) -> DataFrame:
+    """``n`` <= 2**20 distinct pseudo-words as one-word documents (doc_id,
+    text): the five base-16 digits of doc_id under an odd multiplier mod
+    2**20 (a bijection), spelled as consonant-vowel syllables, so the words
+    share syllables and syllable n-grams for BPE to merge."""
+    syl = F.array(*[F.lit(c + v) for c in "bdkmprst" for v in "ao"])
+    h = F.col("id") * 2654435761 % (1 << 20)
+    digits = [(h / 16**k).cast("int") % 16 + 1 for k in range(5)]
+    return spark.range(n).select(
+        F.col("id").alias("doc_id"),
+        F.concat(*[F.element_at(syl, d) for d in digits]).alias("text"),
+    )
 
 
 def _bpe_oracle_sql(n_steps: int) -> str:
@@ -1050,7 +1143,7 @@ def q_cosine_topk(spark, sf_dir):
     )
 
 
-def q_knn_graph(spark, sf_dir):
+def q_knn_graph(spark, sf_dir, *, n_cells=8, n_probe=8):
     """Mutual k-NN graph over the embedding corpus: undirected edges kept only
     when BOTH endpoints rank each other in their cosine top-5 — the
     symmetrized graph behind label propagation and graph clustering, with
@@ -1063,7 +1156,9 @@ def q_knn_graph(spark, sf_dir):
     from lmw_tree_spark.operators.similarity import mutual_knn_edges
 
     emb = _t(spark, sf_dir, "embeddings")
-    return mutual_knn_edges(emb, k=5, n_cells=8, n_probe=8).orderBy("src", "dst")
+    return mutual_knn_edges(
+        emb, k=5, n_cells=n_cells, n_probe=n_probe
+    ).orderBy("src", "dst")
 
 
 def q_centroid_assign(spark, sf_dir):
@@ -1118,35 +1213,37 @@ def q_silhouette(spark, sf_dir):
 #     state — see the oracle-exchange comment at the top) ---------------------
 
 
-def q_minhash_lsh_dedup(spark, sf_dir):
+def q_minhash_lsh_dedup(spark, sf_dir, *, pair_cap=100_000, exchange=True):
     """MinHash+LSH near-dup pairs over the synthetic caption corpus. The 64-perm
     MinHash matrix is materialized long-format; the oracle independently replays
     the band algebra (pairs agreeing on ALL 4 perms of some band — band-hash
     equality without the hash) and the agreement-fraction verify in SQL.
     pair_cap is set above any bucket size so candidates are exactly
-    "pairs sharing ≥ 1 band"."""
+    "pairs sharing ≥ 1 band"; production bounds buckets with chains."""
     import numpy as np
     import pandas as pd
 
     from lmw_tree_spark.operators.dedup import doc_minhash, minhash_lsh_dedup
 
     docs = _caption_docs(spark, 1200)
-    mh = doc_minhash(docs, k=5, n_perm=64)
-    pdf = mh.toPandas()
-    m = np.array(list(pdf["minhash"]), dtype=np.int64)
-    n, p = m.shape
-    _write_exchange(
-        "minhash",
-        minhash=pd.DataFrame(
-            {
-                "doc_id": np.repeat(pdf["doc_id"].to_numpy(), p),
-                "perm_idx": np.tile(np.arange(p, dtype=np.int64), n),
-                "val": m.ravel(),
-            }
-        ),
-    )
+    mh = None
+    if exchange:
+        mh = doc_minhash(docs, k=5, n_perm=64)
+        pdf = mh.toPandas()
+        m = np.array(list(pdf["minhash"]), dtype=np.int64)
+        n, p = m.shape
+        _write_exchange(
+            "minhash",
+            minhash=pd.DataFrame(
+                {
+                    "doc_id": np.repeat(pdf["doc_id"].to_numpy(), p),
+                    "perm_idx": np.tile(np.arange(p, dtype=np.int64), n),
+                    "val": m.ravel(),
+                }
+            ),
+        )
     return minhash_lsh_dedup(
-        docs, min_sim=0.5, pair_cap=100_000, mh=mh
+        docs, min_sim=0.5, pair_cap=pair_cap, mh=mh
     ).orderBy("src", "dst")
 
 
@@ -1431,23 +1528,12 @@ def q_ivf_ann(spark, sf_dir):
     (dense.kmeans_dense, hash-seeded). Embeddings + fitted centroids are
     materialized; the oracle replays cell assignment, 3-probe selection, and
     the within-cell cosine top-k in SQL."""
-    import pandas as pd
-
     from lmw_tree_spark.operators.dense import kmeans_dense
     from lmw_tree_spark.operators.similarity import ivf_cosine_topk
 
     emb = _synthetic_embeddings(spark, _X_N).persist()
     cents = kmeans_dense(emb, k=8, iters=3, init="hash", seed=42)
-    emb_pdf = emb.toPandas()
-    _write_exchange(
-        "ivf",
-        embeddings=pd.DataFrame(
-            {"vec_id": emb_pdf["vec_id"], "v": [list(map(float, v)) for v in emb_pdf["embedding"]]}
-        ),
-        centroids=pd.DataFrame(
-            {"cell": range(len(cents)), "v": [list(map(float, c)) for c in cents]}
-        ),
-    )
+    _embeddings_exchange("ivf", emb, "embeddings", centroids=cents)
     return ivf_cosine_topk(
         emb, k=3, n_cells=8, n_probe=3, query_pred=F.col("vec_id") % 50 == 0,
         centroids=cents,
@@ -1464,23 +1550,12 @@ def q_ann_recall(spark, sf_dir):
     cell-assign → 2-probe → within-cell top-3 chain) and the per-query
     intersection counts, so a disagreement in either ranking or in the
     metric algebra fails the hash."""
-    import pandas as pd
-
     from lmw_tree_spark.operators.dense import kmeans_dense
     from lmw_tree_spark.operators.similarity import cosine_topk, ivf_cosine_topk
 
     emb = _synthetic_embeddings(spark, _X_N).persist()
     cents = kmeans_dense(emb, k=8, iters=3, init="hash", seed=42)
-    emb_pdf = emb.toPandas()
-    _write_exchange(
-        "ann_recall",
-        embeddings=pd.DataFrame(
-            {"vec_id": emb_pdf["vec_id"], "v": [list(map(float, v)) for v in emb_pdf["embedding"]]}
-        ),
-        centroids=pd.DataFrame(
-            {"cell": range(len(cents)), "v": [list(map(float, c)) for c in cents]}
-        ),
-    )
+    _embeddings_exchange("ann_recall", emb, "embeddings", centroids=cents)
     pred = F.col("vec_id") % 50 == 0
     exact = cosine_topk(emb, k=3, query_pred=pred)
     approx = ivf_cosine_topk(
@@ -1517,8 +1592,6 @@ def q_embedding_outliers(spark, sf_dir):
     quantization, squared-L2, argmin with lowest-cell ties, per-cell floor
     mean, gate — so the oracle replays the ENTIRE decision from the exchanged
     raw floats and centroids."""
-    import pandas as pd
-
     from lmw_tree_spark.operators.dense import kmeans_dense
     from lmw_tree_spark.operators.similarity import centroid_outlier_filter
 
@@ -1536,23 +1609,11 @@ def q_embedding_outliers(spark, sf_dir):
     # the gate defends (fitting on contaminated data lets dense outlier
     # clusters capture their own centroid and sail through)
     cents = kmeans_dense(emb, k=8, iters=3, init="hash", seed=42)
-    pdf = scaled.toPandas()
-    _write_exchange(
-        "outliers",
-        embeddings=pd.DataFrame(
-            {
-                "vec_id": pdf["vec_id"],
-                "v": [list(map(float, v)) for v in pdf["embedding"]],
-            }
-        ),
-        centroids=pd.DataFrame(
-            {"cell": range(len(cents)), "v": [list(map(float, c)) for c in cents]}
-        ),
-    )
+    _embeddings_exchange("outliers", scaled, "embeddings", centroids=cents)
     return centroid_outlier_filter(scaled, cents, mult=2).orderBy("vec_id")
 
 
-def q_sq8_recall(spark, sf_dir):
+def q_sq8_recall(spark, sf_dir, *, n=_X_N, exchange=True):
     """Scalar-quantized (int8) ANN + recall eval (operators/pq.py:sq8_encode /
     sq8_topk / fixedpoint_topk) — the storage-cheap sibling of PQ: one byte
     per dimension against the vector's own max-abs scale, Faiss QT_8bit
@@ -1563,21 +1624,11 @@ def q_sq8_recall(spark, sf_dir):
     neighbor-asc tie rule), and the per-query intersection counts from the
     exchanged raw embeddings with NO trusted state (unlike ann_recall, whose
     centroids are a fitted artifact)."""
-    import pandas as pd
-
     from lmw_tree_spark.operators.pq import fixedpoint_topk, sq8_topk
 
-    emb = _synthetic_embeddings(spark, _X_N).persist()
-    emb_pdf = emb.toPandas()
-    _write_exchange(
-        "sq8",
-        embeddings=pd.DataFrame(
-            {
-                "vec_id": emb_pdf["vec_id"],
-                "v": [list(map(float, v)) for v in emb_pdf["embedding"]],
-            }
-        ),
-    )
+    emb = _synthetic_embeddings(spark, n).persist()
+    if exchange:
+        _embeddings_exchange("sq8", emb, "embeddings")
     pred = F.col("vec_id") % 50 == 0
     exact = fixedpoint_topk(emb, k=3, query_pred=pred)
     approx = sq8_topk(emb, k=3, query_pred=pred)
@@ -1601,7 +1652,7 @@ def q_sq8_recall(spark, sf_dir):
     )
 
 
-def q_hard_negatives(spark, sf_dir):
+def q_hard_negatives(spark, sf_dir, *, n=_X_N, exchange=True):
     """Hard-negative mining for contrastive training (CLIP-style): per anchor,
     the top-3 nearest neighbors that are NOT near-duplicates of it — similar
     enough to be informative negatives, but provably outside the anchor's dup
@@ -1611,8 +1662,6 @@ def q_hard_negatives(spark, sf_dir):
     ann_recall). The oracle replays ALL THREE from the exchanged state:
     recursive-CTE closure over the edge list, cell-assign → probe → candidate
     chain, the same-component exclusion, and the final ranking."""
-    import pandas as pd
-
     from lmw_tree_spark.operators.ccomp import connected_components
     from lmw_tree_spark.operators.dense import kmeans_dense
     from lmw_tree_spark.operators.similarity import (
@@ -1620,23 +1669,17 @@ def q_hard_negatives(spark, sf_dir):
         ivf_cosine_topk,
     )
 
-    emb = _synthetic_embeddings(spark, _X_N).persist()
+    emb = _synthetic_embeddings(spark, n).persist()
     edges = cosine_neardup_pairs_bounded(emb, min_cosine=0.9)
     comp = connected_components(
         edges, vertices=emb.select("vec_id"), id_col="vec_id", label_col="grp"
     )
     cents = kmeans_dense(emb, k=8, iters=3, init="hash", seed=42)
-    emb_pdf = emb.toPandas()
-    _write_exchange(
-        "hard_negatives",
-        embeddings=pd.DataFrame(
-            {"vec_id": emb_pdf["vec_id"], "v": [list(map(float, v)) for v in emb_pdf["embedding"]]}
-        ),
-        centroids=pd.DataFrame(
-            {"cell": range(len(cents)), "v": [list(map(float, c)) for c in cents]}
-        ),
-        edges=edges.select("src", "dst").toPandas().sort_values(["src", "dst"]),
-    )
+    if exchange:
+        _embeddings_exchange(
+            "hard_negatives", emb, "embeddings", centroids=cents,
+            edges=edges.select("src", "dst").toPandas(),
+        )
     return ivf_cosine_topk(
         emb, k=3, n_cells=8, n_probe=2,
         query_pred=F.col("vec_id") % 50 == 0,
@@ -1644,7 +1687,7 @@ def q_hard_negatives(spark, sf_dir):
     ).orderBy("query_id", "rank")
 
 
-def q_pq_ann(spark, sf_dir):
+def q_pq_ann(spark, sf_dir, *, exchange=True):
     """Product-quantization ADC top-k (Jégou et al. PAMI 2011) — compressed-
     domain ANN, the float-vector analogue of the reference's compact-signature
     scans (SVector.h:297-364). The per-subspace codebook is trained on a
@@ -1653,37 +1696,12 @@ def q_pq_ann(spark, sf_dir):
     the ENTIRE decision algebra in SQL: per-subspace encode argmin (first-wins
     ties → lowest code), per-query LUT of exact squared subspace distances,
     ADC sum over codes, and the top-3 rank."""
-    import pandas as pd
-
     from lmw_tree_spark.operators.pq import pq_adc_topk, train_pq
 
     emb = _synthetic_embeddings(spark, _X_N).persist()
     cb = train_pq(emb, m=8, ksub=16, seed=42)
-    emb_pdf = emb.toPandas()
-    import numpy as np
-
-    ids = emb_pdf["vec_id"].to_numpy()
-    mat = np.array(list(emb_pdf["embedding"]), dtype=np.float64)
-    n, d = mat.shape
-    m, ksub, dsub = cb.shape
-    _write_exchange(
-        "pq",
-        emb_long=pd.DataFrame(
-            {
-                "vec_id": np.repeat(ids, d),
-                "j": np.tile(np.arange(d, dtype=np.int64), n),
-                "val": mat.ravel(),
-            }
-        ),
-        codebook=pd.DataFrame(
-            {
-                "m": np.repeat(np.arange(m, dtype=np.int64), ksub * dsub),
-                "code": np.tile(np.repeat(np.arange(ksub, dtype=np.int64), dsub), m),
-                "jl": np.tile(np.arange(dsub, dtype=np.int64), m * ksub),
-                "val": cb.ravel(),
-            }
-        ),
-    )
+    if exchange:
+        _embeddings_exchange("pq", emb, "emb_long", codebook=cb)
     return pq_adc_topk(
         emb, cb, k=3, query_pred=F.col("vec_id") % 50 == 0
     ).orderBy("query_id", "rank")
@@ -1696,50 +1714,21 @@ def q_ivfadc_ann(spark, sf_dir):
     PQ codebook are materialized; the oracle replays cell assignment, probe
     selection, per-subspace encode argmin, ADC sum, and the top-3 rank — the
     full composed decision algebra — in SQL."""
-    import numpy as np
-    import pandas as pd
-
     from lmw_tree_spark.operators.dense import kmeans_dense
     from lmw_tree_spark.operators.pq import ivfadc_topk, train_pq
 
     emb = _synthetic_embeddings(spark, _X_N).persist()
     coarse = kmeans_dense(emb, k=8, iters=3, init="hash", seed=42)
     cb = train_pq(emb, m=8, ksub=16, seed=42)
-    emb_pdf = emb.toPandas()
-    ids = emb_pdf["vec_id"].to_numpy()
-    mat = np.array(list(emb_pdf["embedding"]), dtype=np.float64)
-    n, d = mat.shape
-    m, ksub, dsub = cb.shape
-    _write_exchange(
-        "ivfadc",
-        embeddings=pd.DataFrame(
-            {"vec_id": ids, "v": [list(map(float, v)) for v in mat]}
-        ),
-        emb_long=pd.DataFrame(
-            {
-                "vec_id": np.repeat(ids, d),
-                "j": np.tile(np.arange(d, dtype=np.int64), n),
-                "val": mat.ravel(),
-            }
-        ),
-        centroids=pd.DataFrame(
-            {"cell": range(len(coarse)), "v": [list(map(float, c)) for c in coarse]}
-        ),
-        codebook=pd.DataFrame(
-            {
-                "m": np.repeat(np.arange(m, dtype=np.int64), ksub * dsub),
-                "code": np.tile(np.repeat(np.arange(ksub, dtype=np.int64), dsub), m),
-                "jl": np.tile(np.arange(dsub, dtype=np.int64), m * ksub),
-                "val": cb.ravel(),
-            }
-        ),
+    _embeddings_exchange(
+        "ivfadc", emb, "embeddings", "emb_long", centroids=coarse, codebook=cb
     )
     return ivfadc_topk(
         emb, coarse, cb, k=3, n_probe=3, query_pred=F.col("vec_id") % 50 == 0
     ).orderBy("query_id", "rank")
 
 
-def q_srp_neardup(spark, sf_dir):
+def q_srp_neardup(spark, sf_dir, *, pair_cap=100_000, exchange=True):
     """Sign-random-projection (hyperplane) LSH near-dup over embeddings
     (Charikar STOC 2002) — the LSH-bucketed scale path for embedding-cosine
     dedup, complementing the exact ball-cover (embedding_neardup) and SemDeDup
@@ -1755,31 +1744,19 @@ def q_srp_neardup(spark, sf_dir):
     emb = _synthetic_embeddings(spark, _X_N).persist()
     d = 32
     planes = srp_hyperplanes(d, seed=7)
-    emb_pdf = emb.toPandas()
-    ids = emb_pdf["vec_id"].to_numpy()
-    mat = np.array(list(emb_pdf["embedding"]), dtype=np.float64)
-    _write_exchange(
-        "srp",
-        embeddings=pd.DataFrame(
-            {"vec_id": ids, "v": [list(map(float, v)) for v in mat]}
-        ),
-        emb_long=pd.DataFrame(
-            {
-                "vec_id": np.repeat(ids, d),
-                "j": np.tile(np.arange(d, dtype=np.int64), len(ids)),
-                "val": mat.ravel(),
-            }
-        ),
-        planes=pd.DataFrame(
-            {
-                "r": np.repeat(np.arange(64, dtype=np.int64), d),
-                "j": np.tile(np.arange(d, dtype=np.int64), 64),
-                "val": planes.ravel(),
-            }
-        ),
-    )
+    if exchange:
+        _embeddings_exchange(
+            "srp", emb, "embeddings", "emb_long",
+            planes=pd.DataFrame(
+                {
+                    "r": np.repeat(np.arange(64, dtype=np.int64), d),
+                    "j": np.tile(np.arange(d, dtype=np.int64), 64),
+                    "val": planes.ravel(),
+                }
+            ),
+        )
     return srp_neardup_pairs(
-        emb, min_cosine=0.8, pair_cap=100_000, planes=planes
+        emb, min_cosine=0.8, pair_cap=pair_cap, planes=planes
     ).orderBy("src", "dst")
 
 
@@ -2265,12 +2242,8 @@ def q_dedup_images(spark, sf_dir):
     recomputes the components independently with a recursive-CTE transitive
     closure and min-label per vertex."""
     from lmw_tree_spark.operators.ccomp import connected_components
-    from lmw_tree_spark.operators.lsh import candidate_edges, verify_edges
-    from lmw_tree_spark.config import SMALL
 
-    sigs = _fixed_signatures(spark)
-    verified = verify_edges(candidate_edges(sigs, SMALL), sigs, SMALL).where("is_dup")
-    edges = verified.select("src", "dst").persist()
+    sigs, edges = _fixed_signatures(spark), _verified_edges(spark)
     _write_exchange(
         "dedup_cc",
         edges=edges.toPandas(),
@@ -2316,29 +2289,26 @@ def q_dedup_survivors(spark, sf_dir):
     )
 
 
-def q_triangle_support(spark, sf_dir):
+def q_triangle_support(spark, sf_dir, *, exchange=True):
     """Per-edge triangle support over the verified image near-dup graph — the
     corroboration signal k-truss hardening peels on. Spark enumerates each
     triangle once via degree-oriented wedges (Suri & Vassilvitskii, WWW'11);
     the oracle counts common neighbors per edge with a DIFFERENT algorithm
     (symmetric-adjacency intersection join) over the same materialized edge
     set, so the two supports cross-check each other."""
-    from lmw_tree_spark.config import SMALL
     from lmw_tree_spark.operators.graph import triangle_supports
-    from lmw_tree_spark.operators.lsh import candidate_edges, verify_edges
 
-    sigs = _fixed_signatures(spark)
-    verified = verify_edges(candidate_edges(sigs, SMALL), sigs, SMALL).where("is_dup")
-    edges = verified.select("src", "dst").persist()
-    _write_exchange(
-        "ktruss",
-        edges=edges.toPandas(),
-        vertices=sigs.select("image_id").toPandas(),
-    )
+    edges = _verified_edges(spark)
+    if exchange:
+        _write_exchange(
+            "ktruss",
+            edges=edges.toPandas(),
+            vertices=_fixed_signatures(spark).select("image_id").toPandas(),
+        )
     return triangle_supports(edges).orderBy("src", "dst")
 
 
-def q_ktruss_dedup(spark, sf_dir):
+def q_ktruss_dedup(spark, sf_dir, *, exchange=True):
     """Edge-hardened dedup: 3-truss peel (every surviving edge must sit in a
     triangle of surviving edges) before connected components — the production
     guard against a single spurious verified pair fusing two dup groups.
@@ -2347,93 +2317,84 @@ def q_ktruss_dedup(spark, sf_dir):
     replays the SAME fixed number of peel rounds in SQL (post-fixpoint rounds
     are no-ops on both sides) and then recomputes components with a
     recursive-CTE closure from the surviving edge set."""
-    from lmw_tree_spark.config import SMALL
     from lmw_tree_spark.operators.ccomp import connected_components
     from lmw_tree_spark.operators.graph import ktruss
-    from lmw_tree_spark.operators.lsh import candidate_edges, verify_edges
 
-    sigs = _fixed_signatures(spark)
-    verified = verify_edges(candidate_edges(sigs, SMALL), sigs, SMALL).where("is_dup")
-    # Inject deterministic SPURIOUS bridges (the failure mode this operator
-    # exists for): one uncorroborated edge from every 5th dup group
-    # {7k, 7k+1, 7k+2} to the next group's first member. Plain CC would fuse
-    # those group pairs; the 3-truss peel removes the bridges (support 0) and
-    # keeps the clique-backed groups intact.
-    n = F.substring("image_id", 4, 10).cast("long")
-    bridges = sigs.select(
-        F.col("image_id").alias("src"),
-        F.format_string("img%010d", n + 5).alias("dst"),
-    ).where((n % 7 == 2) & ((n / 7).cast("long") % 5 == 0) & (n + 5 < _X_N))
-    edges = verified.select("src", "dst").unionByName(bridges).persist()
-    _write_exchange(
-        "ktruss_cc",
-        edges=edges.toPandas(),
-        vertices=sigs.select("image_id").toPandas(),
-    )
+    sigs, edges = _fixed_signatures(spark), _verified_edges(spark)
+    if exchange:
+        # Inject deterministic SPURIOUS bridges (the failure mode this
+        # operator exists for): one uncorroborated edge from every 5th dup
+        # group {7k, 7k+1, 7k+2} to the next group's first member. Plain CC
+        # would fuse those group pairs; the 3-truss peel removes the bridges
+        # (support 0) and keeps the clique-backed groups intact.
+        n = F.substring("image_id", 4, 10).cast("long")
+        bridges = sigs.select(
+            F.col("image_id").alias("src"),
+            F.format_string("img%010d", n + 5).alias("dst"),
+        ).where((n % 7 == 2) & ((n / 7).cast("long") % 5 == 0) & (n + 5 < _X_N))
+        edges = edges.unionByName(bridges).persist()
+        _write_exchange(
+            "ktruss_cc",
+            edges=edges.toPandas(),
+            vertices=sigs.select("image_id").toPandas(),
+        )
     hard = ktruss(edges, k=3, max_rounds=3)
     return connected_components(hard, vertices=sigs).orderBy("image_id")
 
 
-def q_pagerank_hubs(spark, sf_dir):
+def q_pagerank_hubs(spark, sf_dir, *, exchange=True):
     """PageRank over the verified near-dup graph — rank concentrates on hub
     images (the templates that near-match many variants), the curation review
     queue dup-group size alone misses. Fixed 5 damped iterations
     (graph.py:pagerank); the oracle unrolls the SAME 5 rounds in SQL from the
     materialized edge set, recomputing degrees and inflows independently."""
-    from lmw_tree_spark.config import SMALL
     from lmw_tree_spark.operators.graph import pagerank
-    from lmw_tree_spark.operators.lsh import candidate_edges, verify_edges
 
-    sigs = _fixed_signatures(spark)
-    verified = verify_edges(candidate_edges(sigs, SMALL), sigs, SMALL).where("is_dup")
-    edges = verified.select("src", "dst").persist()
-    _write_exchange("pagerank", edges=edges.toPandas())
+    edges = _verified_edges(spark)
+    if exchange:
+        _write_exchange("pagerank", edges=edges.toPandas())
     return pagerank(edges, iters=5).orderBy("id")
 
 
-def q_modularity(spark, sf_dir):
+def q_modularity(spark, sf_dir, *, exchange=True):
     """Newman modularity of the dup partition, per community — the measured
     counterpart of k-truss repair: a group whose q_contrib is near zero is
     sparser inside than a random cut (probable chain-drift fusion). Only the
     edge set is trusted state: the oracle re-derives the components with a
     recursive-CTE closure AND recomputes the modularity algebra in SQL."""
-    from lmw_tree_spark.config import SMALL
     from lmw_tree_spark.operators.ccomp import connected_components
     from lmw_tree_spark.operators.graph import modularity_by_community
-    from lmw_tree_spark.operators.lsh import candidate_edges, verify_edges
 
-    sigs = _fixed_signatures(spark)
-    verified = verify_edges(candidate_edges(sigs, SMALL), sigs, SMALL).where("is_dup")
-    edges = verified.select("src", "dst").persist()
-    _write_exchange("modularity", edges=edges.toPandas())
+    edges = _verified_edges(spark)
+    if exchange:
+        _write_exchange("modularity", edges=edges.toPandas())
     groups = connected_components(edges)
     return modularity_by_community(edges, groups).orderBy("dup_group")
 
 
-def q_group_diameter(spark, sf_dir):
+def q_group_diameter(spark, sf_dir, *, exchange=True):
     """Chain-drift audit: per dup group the max pairwise phash Hamming
     distance across members (dedup.py:group_diameter) — a diameter well past
     the verify radius means the group was fused by A~B~C chaining. Groups of
     2..64 members are priced; larger report NULL (flagged, not priced). The
     oracle replays the sizing rule and the pairwise-max algebra in SQL from
     the materialized labels + hashes."""
-    from lmw_tree_spark.config import SMALL
     from lmw_tree_spark.operators.ccomp import connected_components
     from lmw_tree_spark.operators.dedup import group_diameter
-    from lmw_tree_spark.operators.lsh import candidate_edges, verify_edges
 
     sigs = _fixed_signatures(spark)
-    verified = verify_edges(candidate_edges(sigs, SMALL), sigs, SMALL).where("is_dup")
-    groups = connected_components(verified, vertices=sigs).persist()
-    _write_exchange(
-        "diameter",
-        labels=groups.toPandas(),
-        hashes=sigs.select("image_id", "phash").toPandas(),
-    )
+    groups = connected_components(_verified_edges(spark), vertices=sigs)
+    if exchange:
+        groups = groups.persist()
+        _write_exchange(
+            "diameter",
+            labels=groups.toPandas(),
+            hashes=sigs.select("image_id", "phash").toPandas(),
+        )
     return group_diameter(groups, sigs, size_cap=64).orderBy("dup_group")
 
 
-def q_bucket_skew(spark, sf_dir):
+def q_bucket_skew(spark, sf_dir, *, exchange=True):
     """Per-modality bucket-size distribution (lsh.py:bucket_skew_stats) — the
     tuning dial for every skew guard (chain_salts / pair_cap / max_token_df
     are sized against this tail). Exact percentiles by histogram-then-scan,
@@ -2443,9 +2404,10 @@ def q_bucket_skew(spark, sf_dir):
     from lmw_tree_spark.config import SMALL
     from lmw_tree_spark.operators.lsh import bucket_skew_stats, tagged_candidate_buckets
 
-    sigs = _fixed_signatures(spark)
-    buckets = tagged_candidate_buckets(sigs, SMALL).persist()
-    _write_exchange("bucket_skew", buckets=buckets.toPandas())
+    buckets = tagged_candidate_buckets(_fixed_signatures(spark), SMALL)
+    if exchange:
+        buckets = buckets.persist()
+        _write_exchange("bucket_skew", buckets=buckets.toPandas())
     return bucket_skew_stats(buckets).orderBy("modality")
 
 
@@ -2456,13 +2418,9 @@ def q_dedup_eval(spark, sf_dir):
     the components (recursive-CTE closure), re-derives the TRUTH independently
     from image_id arithmetic (sources/images.py base_index: groups are
     {7k, 7k+1, 7k+2}), and replays the pair/metric algebra in SQL."""
-    from lmw_tree_spark.config import SMALL
     from lmw_tree_spark.operators.ccomp import connected_components
-    from lmw_tree_spark.operators.lsh import candidate_edges, verify_edges
 
-    sigs = _fixed_signatures(spark)
-    verified = verify_edges(candidate_edges(sigs, SMALL), sigs, SMALL).where("is_dup")
-    edges = verified.select("src", "dst").persist()
+    sigs, edges = _fixed_signatures(spark), _verified_edges(spark)
     _write_exchange(
         "dedup_eval",
         edges=edges.toPandas(),
@@ -2569,6 +2527,49 @@ def _pixels_exchange(images: DataFrame, xname: str = "pixels") -> None:
         .toPandas()
     )
     _write_exchange(xname, pixels=pdf)
+
+
+def _planted(images: DataFrame, tag: str, edit, append: bool = False) -> DataFrame:
+    """Plant md5-selected pixel edits for a pixel oracle. ``edit(px, hx)``
+    gets a row's decoded pixels and the hex md5 of ``"<image_id>:<tag>"`` and
+    returns the edited pixels, or None to leave the row alone. Edited rows are
+    re-encoded as PNG in place or, with ``append``, added as
+    ``<tag>_<image_id>`` rows after their batch's originals. Keeps the
+    (image_id, bytes[, w, h], fmt) columns; returns the table persisted."""
+    import hashlib
+
+    import pandas as pd
+
+    from lmw_tree_spark.sources import codecs
+
+    images = images.select(
+        *[c for c in images.columns if c in ("image_id", "bytes", "w", "h", "fmt")]
+    )
+
+    def plant(batches):
+        for pdf in batches:
+            hits = {}
+            for i, r in enumerate(pdf.itertuples(index=False)):
+                hx = hashlib.md5(f"{r.image_id}:{tag}".encode()).hexdigest()
+                px = edit(codecs.decode_image(bytes(r.bytes), r.fmt), hx)
+                if px is not None:
+                    hits[i] = px
+            if not hits:
+                yield pdf
+                continue
+            rows = pdf.iloc[list(hits)].copy()
+            rows["bytes"] = [codecs.encode_png(px) for px in hits.values()]
+            rows["fmt"] = "png"
+            if "w" in rows:
+                rows["w"] = [px.shape[1] for px in hits.values()]
+                rows["h"] = [px.shape[0] for px in hits.values()]
+            if append:
+                rows["image_id"] = tag + "_" + rows["image_id"]
+                yield pd.concat([pdf, rows], ignore_index=True)
+            else:
+                yield pd.concat([pdf.drop(rows.index), rows]).sort_index()
+
+    return images.mapInPandas(plant, images.schema).persist()
 
 
 def q_image_stats(spark, sf_dir):
@@ -2973,7 +2974,7 @@ def q_dhash_dedup(spark, sf_dir):
     )
 
 
-def q_phash_pixels(spark, sf_dir):
+def q_phash_pixels(spark, sf_dir, *, n=120, pair_cap=100_000, exchange=True):
     """DCT pHash near-dup, derived END-TO-END FROM RAW PIXELS (operators/
     pixels.py:phash_images): the oracle recomputes integer luma, the 32×32
     NN downsample, the fixed-point DCT-II (rebuilding the 2^12-scaled cosine
@@ -2987,13 +2988,15 @@ def q_phash_pixels(spark, sf_dir):
     from lmw_tree_spark.operators.pixels import phash_images
     from lmw_tree_spark.sources.images import generate_images
 
-    images = generate_images(spark, 120).persist()
-    _pixels_exchange(images, xname="phash_px")
+    images = generate_images(spark, n)
+    if exchange:
+        images = images.persist()
+        _pixels_exchange(images, xname="phash_px")
     ph = phash_images(images).select(
         F.substring("image_id", 4, 10).cast("long").alias("doc_id"),
         F.col("phash").alias("simhash"),
     )
-    return simhash_dedup(ph, max_dist=6, pair_cap=100_000, sh=ph).orderBy(
+    return simhash_dedup(ph, max_dist=6, pair_cap=pair_cap, sh=ph).orderBy(
         "src", "dst"
     )
 
@@ -3009,43 +3012,17 @@ def q_tone_dedup(spark, sf_dir):
     6; the oracle re-derives EVERY pHash from raw pixels (NN grid, fixed-
     point DCT, order-statistic threshold, HUGEINT pack) and replays the band
     candidates + verify in SQL."""
-    import hashlib
-
     import numpy as np
-    import pandas as pd
 
     from lmw_tree_spark.operators.dedup import simhash_dedup
     from lmw_tree_spark.operators.pixels import phash_images
-    from lmw_tree_spark.sources import codecs
     from lmw_tree_spark.sources.images import generate_images
 
-    images = generate_images(spark, 120)
+    def shift(px, hx):
+        if hx[0] in "0123456":
+            return np.clip(px.astype(np.int64) + 24, 0, 255).astype(np.uint8)
 
-    def plant(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = [pdf]
-            extra = []
-            for r in pdf.itertuples():
-                hx = hashlib.md5(f"{r.image_id}:tone".encode()).hexdigest()
-                if hx[0] not in "0123456":
-                    continue
-                px = codecs.decode_image(bytes(r.bytes), r.fmt).astype(np.int64)
-                shifted = np.clip(px + 24, 0, 255).astype(np.uint8)
-                extra.append(
-                    ("tone_" + r.image_id, codecs.encode_png(shifted),
-                     r.w, r.h, "png")
-                )
-            if extra:
-                out.append(pd.DataFrame(
-                    extra, columns=["image_id", "bytes", "w", "h", "fmt"]
-                ))
-            yield pd.concat(out, ignore_index=True)
-
-    planted = images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        plant, "image_id string, bytes binary, w int, h int, fmt string"
-    ).persist()
+    planted = _planted(generate_images(spark, 120), "tone", shift, append=True)
     _pixels_exchange(planted, xname="tone")
     ph = phash_images(planted).select(
         F.when(
@@ -3070,46 +3047,21 @@ def q_dihedral_dedup(spark, sf_dir):
     in SQL — 8 transform index maps x 9x9 NN grid x gradient bit pack x
     HUGEINT unsigned min — then the group sizes. A planted copy failing to
     collide would change group_size and fail the hash."""
-    import hashlib
-
     import numpy as np
-    import pandas as pd
 
     from lmw_tree_spark.operators.pixels import _DIHEDRAL, dhash_dihedral
-    from lmw_tree_spark.sources import codecs
     from lmw_tree_spark.sources.images import generate_images
 
-    images = generate_images(spark, 100)
+    def transform(px, hx):
+        if hx[0] in "0123":
+            t_idx = 1 + int(hx[1], 16) % 7  # any non-identity transform
+            yy, xx = np.meshgrid(
+                np.arange(px.shape[0]), np.arange(px.shape[1]), indexing="ij"
+            )
+            sy, sx = _DIHEDRAL[t_idx](yy, xx, px.shape[0] - 1)
+            return px[sy, sx]
 
-    def plant(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = [pdf]
-            extra = []
-            for r in pdf.itertuples():
-                hx = hashlib.md5(f"{r.image_id}:dih".encode()).hexdigest()
-                if hx[0] not in "0123":
-                    continue
-                t_idx = 1 + int(hx[1], 16) % 7  # any non-identity transform
-                px = codecs.decode_image(bytes(r.bytes), r.fmt)
-                yy, xx = np.meshgrid(
-                    np.arange(px.shape[0]), np.arange(px.shape[1]), indexing="ij"
-                )
-                sy, sx = _DIHEDRAL[t_idx](yy, xx, px.shape[0] - 1)
-                extra.append(
-                    ("dih_" + r.image_id, codecs.encode_png(px[sy, sx]),
-                     r.w, r.h, "png")
-                )
-            if extra:
-                out.append(pd.DataFrame(
-                    extra, columns=["image_id", "bytes", "w", "h", "fmt"]
-                ))
-            yield pd.concat(out, ignore_index=True)
-
-    planted = images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        plant, "image_id string, bytes binary, w int, h int, fmt string"
-    ).persist()
+    planted = _planted(generate_images(spark, 100), "dih", transform, append=True)
     _pixels_exchange(planted, xname="dihedral")
     dh = dhash_dihedral(planted)
     sizes = dh.groupBy("dhash_min").agg(F.count("*").alias("group_size"))
@@ -3120,7 +3072,7 @@ def q_dihedral_dedup(spark, sf_dir):
     )
 
 
-def q_crop_dedup(spark, sf_dir):
+def q_crop_dedup(spark, sf_dir, *, n=120, exchange=True):
     """Crop-robust perceptual dedup (operators/pixels.py:tile_ahash +
     tile_match_pairs): per-tile average-hash grid on a 16-px lattice, so a
     crop that preserves >= 2 whole tiles still collides — the modality the
@@ -3130,48 +3082,24 @@ def q_crop_dedup(spark, sf_dir):
     EVERY tile hash from raw pixels in SQL — 8x8 NN tile subsample, integer
     luma, 64*lum > sum(lum) average-hash bits, HUGEINT bit pack — then the
     hash!=0 / df-cap guards and the shared>=2 pair rollup."""
-    import hashlib
-
     import numpy as np
-    import pandas as pd
 
     from lmw_tree_spark.operators.pixels import tile_ahash, tile_match_pairs
-    from lmw_tree_spark.sources import codecs
     from lmw_tree_spark.sources.images import generate_images
 
-    images = generate_images(spark, 120)
+    def crop(px, hx):
+        if hx[0] in "0123":
+            return np.ascontiguousarray(px[:, : px.shape[1] - 16])
 
-    def plant(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = [pdf]
-            extra = []
-            for r in pdf.itertuples():
-                hx = hashlib.md5(f"{r.image_id}:crop".encode()).hexdigest()
-                if hx[0] not in "0123":
-                    continue
-                px = codecs.decode_image(bytes(r.bytes), r.fmt)
-                crop = np.ascontiguousarray(px[:, : px.shape[1] - 16])
-                extra.append(
-                    ("crop_" + r.image_id, codecs.encode_png(crop),
-                     crop.shape[1], crop.shape[0], "png")
-                )
-            if extra:
-                out.append(pd.DataFrame(
-                    extra, columns=["image_id", "bytes", "w", "h", "fmt"]
-                ))
-            yield pd.concat(out, ignore_index=True)
-
-    planted = images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        plant, "image_id string, bytes binary, w int, h int, fmt string"
-    ).persist()
-    _pixels_exchange(planted, xname="crop")
-    pairs = tile_match_pairs(tile_ahash(planted, tile=16), min_shared=2)
+    images = generate_images(spark, n)
+    if exchange:
+        images = _planted(images, "crop", crop, append=True)
+        _pixels_exchange(images, xname="crop")
+    pairs = tile_match_pairs(tile_ahash(images, tile=16), min_shared=2)
     return pairs.orderBy("src", "dst")
 
 
-def q_watermark_flags(spark, sf_dir):
+def q_watermark_flags(spark, sf_dir, *, n=120, exchange=True):
     """Watermark / logo-overlay curation gate (operators/pixels.py:
     overlay_flags): template tiles — a tile hash recurring at the SAME grid
     position across >= min_images distinct images — mark stamped corpora,
@@ -3182,16 +3110,11 @@ def q_watermark_flags(spark, sf_dir):
     hash from raw pixels in SQL (8x8 NN subsample, integer luma, average-
     hash bits, HUGEINT pack), mines templates with the same
     count(DISTINCT image)>=N rule, and replays the per-image rollup."""
-    import hashlib
-
     import numpy as np
-    import pandas as pd
 
     from lmw_tree_spark.operators.pixels import overlay_flags, tile_ahash
-    from lmw_tree_spark.sources import codecs
     from lmw_tree_spark.sources.images import generate_images
 
-    images = generate_images(spark, 120)
     stamp = (
         (np.arange(16)[:, None] * 37 + np.arange(16)[None, :] * 101) % 197 + 30
     ).astype(np.uint8)
@@ -3199,36 +3122,23 @@ def q_watermark_flags(spark, sf_dir):
         (np.arange(16)[:, None] * 59 + np.arange(16)[None, :] * 13) % 211 + 20
     ).astype(np.uint8)
 
-    def plant(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for r in pdf.itertuples():
-                hx = hashlib.md5(f"{r.image_id}:wm".encode()).hexdigest()
-                if hx[0] in "01234567":
-                    px = codecs.decode_image(bytes(r.bytes), r.fmt).copy()
-                    px[:16, :16, :] = stamp[..., None]
-                    if hx[1] in "0123":
-                        px[16:32, 16:32, :] = stamp2[..., None]
-                    rows.append(
-                        (r.image_id, codecs.encode_png(px), r.w, r.h, "png")
-                    )
-                else:
-                    rows.append((r.image_id, r.bytes, r.w, r.h, r.fmt))
-            yield pd.DataFrame(
-                rows, columns=["image_id", "bytes", "w", "h", "fmt"]
-            )
+    def mark(px, hx):
+        if hx[0] in "01234567":
+            px = px.copy()
+            px[:16, :16, :] = stamp[..., None]
+            if hx[1] in "0123":
+                px[16:32, 16:32, :] = stamp2[..., None]
+            return px
 
-    planted = images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        plant, "image_id string, bytes binary, w int, h int, fmt string"
-    ).persist()
-    _pixels_exchange(planted, xname="wm")
-    flags = overlay_flags(tile_ahash(planted, tile=16), min_images=8)
+    images = generate_images(spark, n)
+    if exchange:
+        images = _planted(images, "wm", mark)
+        _pixels_exchange(images, xname="wm")
+    flags = overlay_flags(tile_ahash(images, tile=16), min_images=8)
     return flags.orderBy("image_id")
 
 
-def q_color_filter(spark, sf_dir):
+def q_color_filter(spark, sf_dir, *, n=120, exchange=True):
     """Grayscale / colorfulness curation gate (operators/pixels.py:
     color_stats + color_gate): the LAION-style color filter — drop grayscale
     scans and near-monochrome thumbnails before aesthetic subsetting. The
@@ -3239,50 +3149,29 @@ def q_color_filter(spark, sf_dir):
     integer sums (RG = R−G, YB2 = R+G−2B), deviation max, and saturated-pixel
     count from raw pixels in SQL and replays the Hasler–Süsstrunk formula and
     both gate branches on the same rounded values."""
-    import hashlib
-
     import numpy as np
-    import pandas as pd
 
     from lmw_tree_spark.operators.pixels import color_gate, color_stats
-    from lmw_tree_spark.sources import codecs
     from lmw_tree_spark.sources.images import generate_images
 
-    images = generate_images(spark, 120)
+    def desaturate(px, hx):
+        if hx[0] in "0123":
+            px = px.astype(np.int64)
+            lum = (299 * px[..., 0] + 587 * px[..., 1] + 114 * px[..., 2]) // 1000
+            if hx[1] in "01234567":  # grayscale: luma in all channels
+                out = np.repeat(lum[..., None], 3, axis=2)
+            else:  # desaturated: chroma shrunk 16x, not grayscale
+                out = lum[..., None] + (px - lum[..., None]) // 16
+            return out.clip(0, 255).astype(np.uint8)
 
-    def plant(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for r in pdf.itertuples():
-                hx = hashlib.md5(f"{r.image_id}:color".encode()).hexdigest()
-                if hx[0] in "0123":
-                    px = codecs.decode_image(bytes(r.bytes), r.fmt).astype(np.int64)
-                    lum = (299 * px[..., 0] + 587 * px[..., 1] + 114 * px[..., 2]) // 1000
-                    if hx[1] in "01234567":  # grayscale: luma in all channels
-                        out = np.repeat(lum[..., None], 3, axis=2)
-                    else:  # desaturated: chroma shrunk 16x, not grayscale
-                        out = lum[..., None] + (px - lum[..., None]) // 16
-                    rows.append(
-                        (r.image_id,
-                         codecs.encode_png(out.clip(0, 255).astype(np.uint8)),
-                         r.w, r.h, "png")
-                    )
-                else:
-                    rows.append((r.image_id, r.bytes, r.w, r.h, r.fmt))
-            yield pd.DataFrame(
-                rows, columns=["image_id", "bytes", "w", "h", "fmt"]
-            )
-
-    planted = images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        plant, "image_id string, bytes binary, w int, h int, fmt string"
-    ).persist()
-    _pixels_exchange(planted, xname="color")
-    return color_gate(color_stats(planted)).orderBy("image_id")
+    images = generate_images(spark, n)
+    if exchange:
+        images = _planted(images, "color", desaturate)
+        _pixels_exchange(images, xname="color")
+    return color_gate(color_stats(images)).orderBy("image_id")
 
 
-def q_collage_filter(spark, sf_dir):
+def q_collage_filter(spark, sf_dir, *, n=120, exchange=True):
     """Collage / tiled-texture junk gate (operators/pixels.py:
     tile_self_similarity): an image whose own non-constant tiles repeat at
     4+ grid positions is mosaic chrome (sprite sheets, wallpaper tiles,
@@ -3291,46 +3180,24 @@ def q_collage_filter(spark, sf_dir):
     the full frame — every tile identical); the oracle re-derives every tile
     hash from raw pixels in SQL and replays the per-image repeat rollup and
     gate."""
-    import hashlib
-
     import numpy as np
-    import pandas as pd
 
     from lmw_tree_spark.operators.pixels import tile_ahash, tile_self_similarity
-    from lmw_tree_spark.sources import codecs
     from lmw_tree_spark.sources.images import generate_images
 
-    images = generate_images(spark, 120)
+    def collage(px, hx):
+        if hx[0] in "0123":
+            h, w = px.shape[:2]
+            return np.tile(px[:16, :16, :], (h // 16 + 1, w // 16 + 1, 1))[:h, :w, :]
 
-    def plant(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for r in pdf.itertuples():
-                hx = hashlib.md5(f"{r.image_id}:collage".encode()).hexdigest()
-                if hx[0] in "0123":
-                    px = codecs.decode_image(bytes(r.bytes), r.fmt)
-                    block = px[:16, :16, :]
-                    reps = (int(r.h) // 16 + 1, int(r.w) // 16 + 1, 1)
-                    tiled = np.tile(block, reps)[: int(r.h), : int(r.w), :]
-                    rows.append(
-                        (r.image_id, codecs.encode_png(tiled), r.w, r.h, "png")
-                    )
-                else:
-                    rows.append((r.image_id, r.bytes, r.w, r.h, r.fmt))
-            yield pd.DataFrame(
-                rows, columns=["image_id", "bytes", "w", "h", "fmt"]
-            )
-
-    planted = images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        plant, "image_id string, bytes binary, w int, h int, fmt string"
-    ).persist()
-    _pixels_exchange(planted, xname="collage")
-    return tile_self_similarity(tile_ahash(planted, tile=16)).orderBy("image_id")
+    images = generate_images(spark, n)
+    if exchange:
+        images = _planted(images, "collage", collage)
+        _pixels_exchange(images, xname="collage")
+    return tile_self_similarity(tile_ahash(images, tile=16)).orderBy("image_id")
 
 
-def q_text_overlay(spark, sf_dir):
+def q_text_overlay(spark, sf_dir, *, n=120, exchange=True):
     """Burned-in text / meme-caption gate (operators/pixels.py:
     text_overlay_stats + text_overlay_gate): glyph strokes are dense
     ALTERNATING strong horizontal gradients, so the flag compares the bottom
@@ -3340,52 +3207,30 @@ def q_text_overlay(spark, sf_dir):
     bottom third — the stroke texture at thumbnail scale); the oracle
     re-derives gradients, strong-flip positions, band membership, and both
     rounded densities from raw pixels via shifted self-joins in SQL."""
-    import hashlib
-
     import numpy as np
-    import pandas as pd
 
     from lmw_tree_spark.operators.pixels import (
         text_overlay_gate,
         text_overlay_stats,
     )
-    from lmw_tree_spark.sources import codecs
     from lmw_tree_spark.sources.images import generate_images
 
-    images = generate_images(spark, 120)
+    def caption_bar(px, hx):
+        if hx[0] in "0123":
+            px = px.copy()
+            h, w = px.shape[:2]
+            cols = np.where(np.arange(w) % 2 == 0, 40, 220).astype(np.uint8)
+            px[h - h // 3:, :, :] = cols[None, :, None]
+            return px
 
-    def plant(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for r in pdf.itertuples():
-                hx = hashlib.md5(f"{r.image_id}:text".encode()).hexdigest()
-                if hx[0] in "0123":
-                    px = codecs.decode_image(bytes(r.bytes), r.fmt).copy()
-                    h, w = px.shape[:2]
-                    band0 = h - h // 3
-                    cols = np.where(np.arange(w) % 2 == 0, 40, 220).astype(
-                        np.uint8
-                    )
-                    px[band0:, :, :] = cols[None, :, None]
-                    rows.append(
-                        (r.image_id, codecs.encode_png(px), r.w, r.h, "png")
-                    )
-                else:
-                    rows.append((r.image_id, r.bytes, r.w, r.h, r.fmt))
-            yield pd.DataFrame(
-                rows, columns=["image_id", "bytes", "w", "h", "fmt"]
-            )
-
-    planted = images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        plant, "image_id string, bytes binary, w int, h int, fmt string"
-    ).persist()
-    _pixels_exchange(planted, xname="textov")
-    return text_overlay_gate(text_overlay_stats(planted)).orderBy("image_id")
+    images = generate_images(spark, n)
+    if exchange:
+        images = _planted(images, "text", caption_bar)
+        _pixels_exchange(images, xname="textov")
+    return text_overlay_gate(text_overlay_stats(images)).orderBy("image_id")
 
 
-def q_image_funnel(spark, sf_dir):
+def q_image_funnel(spark, sf_dir, *, n=120, exchange=True):
     """The composed image curation funnel, ONE DECODE PASS (operators/
     pixels.py:gate_features + image_gates): at 100 TB decode dominates the
     gate family's cost, so entropy, grayscale/colorfulness, sharpness/
@@ -3397,53 +3242,30 @@ def q_image_funnel(spark, sf_dir):
     from raw pixels in SQL (histogram entropy, 4-neighbor Laplacian via
     shifted self-joins, opponent-axis sums, tile-hash repeats) and replays
     every decision."""
-    import hashlib
-
     import numpy as np
-    import pandas as pd
 
     from lmw_tree_spark.operators.pixels import gate_features, image_gates
-    from lmw_tree_spark.sources import codecs
     from lmw_tree_spark.sources.images import generate_images
 
-    images = generate_images(spark, 120)
+    def spoil(px, hx):
+        h, w = px.shape[:2]
+        if hx[0] in "01":  # flat: fails entropy + sharpness
+            return np.full((h, w, 3), 60 + int(hx[1], 16) * 12, dtype=np.uint8)
+        if hx[0] in "23":  # grayscale: fails color
+            d = px.astype(np.int64)
+            lum = (299 * d[..., 0] + 587 * d[..., 1] + 114 * d[..., 2]) // 1000
+            return np.repeat(lum[..., None], 3, axis=2).astype(np.uint8)
+        if hx[0] in "45":  # collage: fails tile-repeat gate
+            return np.tile(px[:16, :16, :], (h // 16 + 1, w // 16 + 1, 1))[:h, :w, :]
 
-    def plant(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for r in pdf.itertuples():
-                hx = hashlib.md5(f"{r.image_id}:funnel".encode()).hexdigest()
-                if hx[0] in "01":  # flat: fails entropy + sharpness
-                    c = 60 + int(hx[1], 16) * 12
-                    px = np.full((int(r.h), int(r.w), 3), c, dtype=np.uint8)
-                elif hx[0] in "23":  # grayscale: fails color
-                    d = codecs.decode_image(bytes(r.bytes), r.fmt).astype(np.int64)
-                    lum = (299 * d[..., 0] + 587 * d[..., 1] + 114 * d[..., 2]) // 1000
-                    px = np.repeat(lum[..., None], 3, axis=2).astype(np.uint8)
-                elif hx[0] in "45":  # collage: fails tile-repeat gate
-                    d = codecs.decode_image(bytes(r.bytes), r.fmt)
-                    reps = (int(r.h) // 16 + 1, int(r.w) // 16 + 1, 1)
-                    px = np.tile(d[:16, :16, :], reps)[: int(r.h), : int(r.w), :]
-                else:
-                    rows.append((r.image_id, r.bytes, r.w, r.h, r.fmt))
-                    continue
-                rows.append(
-                    (r.image_id, codecs.encode_png(px), r.w, r.h, "png")
-                )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "bytes", "w", "h", "fmt"]
-            )
-
-    planted = images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        plant, "image_id string, bytes binary, w int, h int, fmt string"
-    ).persist()
-    _pixels_exchange(planted, xname="funnel")
-    return image_gates(gate_features(planted)).orderBy("image_id")
+    images = generate_images(spark, n)
+    if exchange:
+        images = _planted(images, "funnel", spoil)
+        _pixels_exchange(images, xname="funnel")
+    return image_gates(gate_features(images)).orderBy("image_id")
 
 
-def q_sharpness_filter(spark, sf_dir):
+def q_sharpness_filter(spark, sf_dir, *, n=120, exchange=True):
     """Sharpness + exposure curation gate (operators/pixels.py:
     sharpness_stats): variance-of-Laplacian energy and clipped-pixel counts
     as pure integer algebra. The query plants flat frames (md5-selected
@@ -3452,41 +3274,21 @@ def q_sharpness_filter(spark, sf_dir):
     pixels in SQL — integer luma, 4-neighbor Laplacian via shifted
     self-joins over the interior, squared-sum rollup, clip counts, and the
     cross-multiplied keep predicate."""
-    import hashlib
-
     import numpy as np
-    import pandas as pd
 
     from lmw_tree_spark.operators.pixels import sharpness_stats
-    from lmw_tree_spark.sources import codecs
     from lmw_tree_spark.sources.images import generate_images
 
-    images = generate_images(spark, 120)
+    def flatten(px, hx):
+        if hx[0] in "0123":
+            c = 100 + int(hx[1], 16) * 10  # 100..250: some clip
+            return np.full(px.shape, c, dtype=np.uint8)
 
-    def plant(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for r in pdf.itertuples():
-                hx = hashlib.md5(f"{r.image_id}:flat".encode()).hexdigest()
-                if hx[0] in "0123":
-                    c = 100 + int(hx[1], 16) * 10  # 100..250: some clip
-                    px = np.full((int(r.h), int(r.w), 3), c, dtype=np.uint8)
-                    rows.append(
-                        (r.image_id, codecs.encode_png(px), r.w, r.h, "png")
-                    )
-                else:
-                    rows.append((r.image_id, r.bytes, r.w, r.h, r.fmt))
-            yield pd.DataFrame(
-                rows, columns=["image_id", "bytes", "w", "h", "fmt"]
-            )
-
-    planted = images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        plant, "image_id string, bytes binary, w int, h int, fmt string"
-    ).persist()
-    _pixels_exchange(planted, xname="sharp")
-    return sharpness_stats(planted).select(
+    images = generate_images(spark, n)
+    if exchange:
+        images = _planted(images, "flat", flatten)
+        _pixels_exchange(images, xname="sharp")
+    return sharpness_stats(images).select(
         "image_id", "n_px", "n_interior", "sum_lap2", "n_over", "n_under",
         F.col("keep").cast("int").alias("keep"),
     ).orderBy("image_id")
@@ -3999,8 +3801,6 @@ def q_video_neardup(spark, sf_dir):
     dedup_images family); the oracle independently replays edge orientation,
     the countDistinct coverage algebra, the least(na,nb)/2 threshold, and the
     recursive-CTE transitive closure."""
-    import pandas as pd
-
     from lmw_tree_spark.config import SMALL
     from lmw_tree_spark.operators import lsh
     from lmw_tree_spark.operators.signature_stage import extract_signatures
@@ -6278,7 +6078,7 @@ def q_shot_detect(spark, sf_dir):
     return shot_boundaries(hist).orderBy("video_id", "shot_id")
 
 
-def q_shot_keyframes(spark, sf_dir):
+def q_shot_keyframes(spark, sf_dir, *, n=24, exchange=True):
     """Per-shot keyframe selection (sources/multimodal.py:select_keyframes):
     after shot detection, pick the frame whose luma histogram is L1-closest
     to the shot's mean histogram (cross-multiplied to exact integers:
@@ -6296,9 +6096,10 @@ def q_shot_keyframes(spark, sf_dir):
         shot_boundaries,
     )
 
-    videos = _synthetic_cut_videos(spark).persist()
+    videos = _synthetic_cut_videos(spark, n).persist()
     hist = frame_luma_histograms(videos).persist()
-    _write_exchange("shots", hist=hist.toPandas())
+    if exchange:
+        _write_exchange("shots", hist=hist.toPandas())
     shots = shot_boundaries(hist)
     return select_keyframes(hist, shots).orderBy("video_id", "shot_id")
 
@@ -6338,7 +6139,7 @@ def q_ar_bucket(spark, sf_dir):
     return assign_ar_buckets(dims, id_col="doc_id").orderBy("doc_id")
 
 
-def q_letterbox_crop(spark, sf_dir):
+def q_letterbox_crop(spark, sf_dir, *, n=120, exchange=True):
     """Letterbox/pillarbox margin detection (operators/pixels.py:
     letterbox_crop) — crop normalization before perceptual hashing, so a
     padded re-upload dedups against its original. The corpus is the shared
@@ -6355,33 +6156,31 @@ def q_letterbox_crop(spark, sf_dir):
     from lmw_tree_spark.sources import codecs
     from lmw_tree_spark.sources.images import generate_images
 
-    rng = np.random.default_rng(23)
-    planted = []
-    specs = [
-        ("lb_tb", 3, 3, 0, 0), ("lb_tb2", 5, 2, 0, 0),
-        ("lb_lr", 0, 0, 4, 4), ("lb_lr2", 0, 0, 2, 6),
-        ("lb_all", 2, 2, 3, 3), ("lb_solid", 0, 0, 0, 0),
-    ]
-    for name, t, b, l, rr in specs:
-        px = np.zeros((20, 24, 3), dtype=np.uint8)
-        if name != "lb_solid":
-            inner = rng.integers(1, 256, size=(20 - t - b, 24 - l - rr, 3))
-            px[t:20 - b or None, l:24 - rr or None] = inner.astype(np.uint8)
-        planted.append((name, codecs.encode_png(px), "png"))
-    images = (
-        generate_images(spark, 120).select("image_id", "bytes", "fmt")
-        .unionByName(
+    images = generate_images(spark, n).select("image_id", "bytes", "fmt")
+    if exchange:
+        rng = np.random.default_rng(23)
+        planted = []
+        specs = [
+            ("lb_tb", 3, 3, 0, 0), ("lb_tb2", 5, 2, 0, 0),
+            ("lb_lr", 0, 0, 4, 4), ("lb_lr2", 0, 0, 2, 6),
+            ("lb_all", 2, 2, 3, 3), ("lb_solid", 0, 0, 0, 0),
+        ]
+        for name, t, b, l, rr in specs:
+            px = np.zeros((20, 24, 3), dtype=np.uint8)
+            if name != "lb_solid":
+                inner = rng.integers(1, 256, size=(20 - t - b, 24 - l - rr, 3))
+                px[t:20 - b or None, l:24 - rr or None] = inner.astype(np.uint8)
+            planted.append((name, codecs.encode_png(px), "png"))
+        images = images.unionByName(
             spark.createDataFrame(
                 pd.DataFrame(planted, columns=["image_id", "bytes", "fmt"])
             )
-        )
-        .persist()
-    )
-    _pixels_exchange(images, xname="letterbox")
+        ).persist()
+        _pixels_exchange(images, xname="letterbox")
     return letterbox_crop(images).orderBy("image_id")
 
 
-def q_padded_dedup(spark, sf_dir):
+def q_padded_dedup(spark, sf_dir, *, n=120, exchange=True):
     """Padded re-upload recovery (operators/pixels.py:phash_cropped) — the
     composition letterbox-crop → DCT pHash, proving crop normalization does
     its job: a re-upload with letterbox/pillarbox bars hashes IDENTICALLY to
@@ -6393,59 +6192,35 @@ def q_padded_dedup(spark, sf_dir):
     min=max, crop run lengths with the fully-flat fallback, the offset 32×32
     NN grid, the fixed-point DCT, the order-statistic threshold, the HUGEINT
     bit pack, and the equal-hash pair join."""
-    import hashlib
-
     import numpy as np
-    import pandas as pd
 
     from lmw_tree_spark.operators.pixels import phash_cropped
-    from lmw_tree_spark.sources import codecs
     from lmw_tree_spark.sources.images import generate_images
 
-    images = generate_images(spark, 120)
+    def pad(px, hx):
+        if hx[0] in "012345":
+            t, b = int(hx[1], 16) % 7, int(hx[2], 16) % 7
+            l, rr = int(hx[3], 16) % 7, int(hx[4], 16) % 7
+            if t + b + l + rr == 0:
+                t = 3
+            color = 0 if int(hx[5], 16) % 2 == 0 else 255
+            h, w, _ = px.shape
+            padded = np.full((h + t + b, w + l + rr, 3), color, np.uint8)
+            padded[t:t + h, l:l + w] = px
+            return padded
 
-    def plant(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = [pdf]
-            extra = []
-            for r in pdf.itertuples():
-                hx = hashlib.md5(f"{r.image_id}:pad".encode()).hexdigest()
-                if hx[0] not in "012345":
-                    continue
-                px = codecs.decode_image(bytes(r.bytes), r.fmt)
-                t, b = int(hx[1], 16) % 7, int(hx[2], 16) % 7
-                l, rr = int(hx[3], 16) % 7, int(hx[4], 16) % 7
-                if t + b + l + rr == 0:
-                    t = 3
-                color = 0 if int(hx[5], 16) % 2 == 0 else 255
-                h, w, _ = px.shape
-                padded = np.full((h + t + b, w + l + rr, 3), color, np.uint8)
-                padded[t:t + h, l:l + w] = px
-                extra.append(
-                    ("pad_" + r.image_id, codecs.encode_png(padded), "png")
-                )
-            if extra:
-                out.append(
-                    pd.DataFrame(extra, columns=["image_id", "bytes", "fmt"])
-                )
-            yield pd.concat(out, ignore_index=True)
-
-    planted = (
-        images.select("image_id", "bytes", "fmt")
-        .mapInPandas(plant, "image_id string, bytes binary, fmt string")
-        .persist()
-    )
-    _pixels_exchange(planted, xname="padded")
-    ph = phash_cropped(planted)
+    images = generate_images(spark, n).select("image_id", "bytes", "fmt")
+    if exchange:
+        images = _planted(images, "pad", pad, append=True)
+        _pixels_exchange(images, xname="padded")
+    ph = phash_cropped(images)
     a = ph.select(F.col("image_id").alias("src"), "phash")
     b = ph.select(F.col("image_id").alias("dst"), "phash")
     pairs = a.join(b, "phash").where(F.col("src") < F.col("dst"))
     return pairs.select("src", "dst", "phash").orderBy("src", "dst")
 
 
-def q_entropy_filter(spark, sf_dir):
+def q_entropy_filter(spark, sf_dir, *, n=120, exchange=True):
     """Low-information image gate (operators/pixels.py:entropy_gate) — the
     curation step that drops solid placeholders / blank thumbnails before
     signatures: 256-bin integer-luma histogram (exact counts from the Arrow
@@ -6462,21 +6237,20 @@ def q_entropy_filter(spark, sf_dir):
     from lmw_tree_spark.sources import codecs
     from lmw_tree_spark.sources.images import generate_images
 
-    flats = []
-    for i in range(8):
-        px = np.full((16, 16, 3), 32 * i, dtype=np.uint8)
-        if i >= 4:  # two-tone horizontal stripes: entropy ~1 bit
-            px[::2] = 255 - 32 * i
-        flats.append((f"flat_{i:02d}", codecs.encode_png(px), "png"))
-    planted = spark.createDataFrame(
-        pd.DataFrame(flats, columns=["image_id", "bytes", "fmt"])
-    )
-    images = (
-        generate_images(spark, 120).select("image_id", "bytes", "fmt")
-        .unionByName(planted)
-        .persist()
-    )
-    _pixels_exchange(images, xname="entropy")
+    images = generate_images(spark, n).select("image_id", "bytes", "fmt")
+    if exchange:
+        flats = []
+        for i in range(8):
+            px = np.full((16, 16, 3), 32 * i, dtype=np.uint8)
+            if i >= 4:  # two-tone horizontal stripes: entropy ~1 bit
+                px[::2] = 255 - 32 * i
+            flats.append((f"flat_{i:02d}", codecs.encode_png(px), "png"))
+        images = images.unionByName(
+            spark.createDataFrame(
+                pd.DataFrame(flats, columns=["image_id", "bytes", "fmt"])
+            )
+        ).persist()
+        _pixels_exchange(images, xname="entropy")
     return entropy_gate(luma_histogram(images), min_bits=3.0).orderBy("image_id")
 
 
@@ -6582,6 +6356,40 @@ def q_lsh_band_sweep(spark, sf_dir):
         .distinct()
     )
     return band_config_sweep(toks).orderBy("rows_per_band")
+
+
+# Production parameters: bench.py times queries()[name](spark, sf_dir,
+# **BENCH_PARAMS.get(name, {})). A query's keyword-only parameters default to
+# the oracle's values; production differs in input size (n), operator
+# parameters, and exchange=False, which skips writing the oracle exchange and
+# planting the inputs it checks.
+BENCH_PARAMS: dict[str, dict] = {
+    "minhash_lsh_dedup": {"pair_cap": 64, "exchange": False},
+    "hard_negatives": {"n": 4000, "exchange": False},
+    "triangle_support": {"exchange": False},
+    "ktruss_dedup": {"exchange": False},
+    "pagerank_hubs": {"exchange": False},
+    "modularity": {"exchange": False},
+    "group_diameter": {"exchange": False},
+    "bucket_skew": {"exchange": False},
+    "pq_ann": {"exchange": False},
+    "srp_neardup": {"pair_cap": 256, "exchange": False},
+    "sq8_recall": {"n": 4000, "exchange": False},
+    "shot_keyframes": {"n": 96, "exchange": False},
+    "phash_pixels": {"n": 2000, "pair_cap": 64, "exchange": False},
+    **{
+        name: {"n": 2000, "exchange": False}
+        for name in (
+            "crop_dedup", "sharpness_filter", "entropy_filter", "letterbox_crop",
+            "padded_dedup", "watermark_flags", "color_filter", "collage_filter",
+            "image_funnel", "text_overlay",
+        )
+    },
+    # near-dup-tight eps: the sparse graph a real run builds
+    "dbscan_embeddings": {"min_cosine": 0.75},
+    # approximate graph: n_probe < n_cells
+    "knn_graph": {"n_cells": 64, "n_probe": 4},
+}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -1,32 +1,29 @@
 """Benchmark harness: flagship dedup+cluster throughput, EM-iteration throughput
-vs the reference's single-node number, and headline query timings.
+vs the reference's single-node number, signature-stage scaling, and headline
+query timings.
 
 Prints ONE JSON line:
   {"metric": "...", "value": <seconds>, "unit": "sec", "queries": {...}, "sf": ...,
-   "throughput_images_per_sec": ..., "em_iter": {...}, "scaling": {...}}
+   "throughput_images_per_sec": ..., "em_iter": {...}, "scaling": {...},
+   "bpe_1024": {...}}
+
+Every level follows CPUS ($SPARK_GRAFT_CPUS, default: the cores this process
+may run on), so no level oversubscribes the machine.
 
 - Flagship: synthetic image+caption table (scale from $SPARK_GRAFT_SF_DIR) →
   signatures → LSH dedup → connected components → EM-tree fit+assign, timed
-  end-to-end at local[$SPARK_GRAFT_CPUS].
-- EM-iteration throughput: distributed streaming-EM insert pass (descend +
-  per-partition accumulate + blob combine) over synthetic 4096-bit signatures
-  at the reference's flagship geometry (m=10, depth=4,
-  /root/reference/src/StreamingEMTreeExperiments.h:29-31). The reference records
-  ≈226k signatures/sec single-node (/root/reference/src/lmw/SVector.h:325-330);
-  ``sigs_per_sec`` here is the direct comparison. Reported at two parallelism
-  levels.
-- Scaling evidence (north rule, per driver instruction): the SAME job at N and
-  4N cores on identical input; efficiency = (t_small / t_big) / 4 — 1.0 is
-  perfect linear scaling. The primary pair is the signature-extraction stage at
-  local[1] vs local[4]: this sandbox VM's AGGREGATE memory bandwidth is only
-  ~3-4x one core's (virtio/firecracker), so every data-parallel workload
-  saturates around 8 concurrent workers no matter how it is partitioned — 1→4
-  sits below that ceiling and measures the ENGINE's scaling (the regime of a
-  real multi-executor cluster, where each executor owns its own memory bus).
-  The 2→8 pair and the EM 8→32 numbers are also reported; they progressively
-  measure the VM ceiling, not the engine.
-- queries: per-query wall seconds for representative operators on the driver
-  tables.
+  end-to-end at local[CPUS].
+- EM-iteration throughput: distributed streaming-EM insert passes over
+  $SPARK_GRAFT_EM_ROWS synthetic 4096-bit signatures at the reference's
+  flagship geometry (m=10, depth=4, StreamingEMTreeExperiments.h:29-31), at
+  local[CPUS]. The reference records ≈226k signatures/sec single-node
+  (SVector.h:325-330); ``sigs_per_sec`` is the direct comparison.
+- Scaling: the signature-extraction stage on identical input at local[1] and
+  local[CPUS]; efficiency = (t_1 / t_CPUS) / CPUS, 1.0 being linear scaling.
+- queries: per-query wall seconds of ``__spark_entry__.queries()`` — the
+  functions the DuckDB oracles check — called with that module's
+  ``BENCH_PARAMS`` production parameters.
+- bpe_1024: ``q_bpe_train`` at 1024 merges over a 60k-word synthetic table.
 """
 
 from __future__ import annotations
@@ -217,400 +214,47 @@ def run_sig_stage(master: str, parts: int, n_images: int, trials: int = 3) -> di
         spark.stop()
 
 
-def _minhash_production(spark, sf_dir):
-    """Production-config MinHash+LSH near-dup (pair_cap=64 chain+clique bound,
-    no oracle-exchange materialization) — the configuration a 100 TB run uses.
-    The oracle query (q_minhash_lsh_dedup) deliberately runs pair_cap high
-    enough to make the candidate set SQL-replayable and materializes the
-    minhash matrix inside the query; timing THAT conflates oracle plumbing
-    with the operator (the r02 2x 'regression' was exactly this)."""
-    import __spark_entry__ as entry
-    from lmw_tree_spark.operators.dedup import minhash_lsh_dedup
-
-    docs = entry._caption_docs(spark, 1200)
-    return minhash_lsh_dedup(docs, min_sim=0.5, pair_cap=64)
-
-
-def _hard_negatives_production(spark, sf_dir):
-    """Production-config hard-negative mining (no oracle-exchange
-    materialization): near-dup edges -> components -> group-excluded IVF
-    top-k, as a contrastive-training pipeline runs it."""
-    import __spark_entry__ as entry
-    from pyspark.sql import functions as F
-
-    from lmw_tree_spark.operators.ccomp import connected_components
-    from lmw_tree_spark.operators.dense import kmeans_dense
-    from lmw_tree_spark.operators.similarity import (
-        cosine_neardup_pairs_bounded,
-        ivf_cosine_topk,
-    )
-
-    emb = entry._synthetic_embeddings(spark, 4000).persist()
-    edges = cosine_neardup_pairs_bounded(emb, min_cosine=0.9)
-    comp = connected_components(
-        edges, vertices=emb.select("vec_id"), id_col="vec_id", label_col="grp"
-    )
-    cents = kmeans_dense(emb, k=8, iters=3, init="hash", seed=42)
-    return ivf_cosine_topk(
-        emb, k=3, n_cells=8, n_probe=2,
-        query_pred=F.col("vec_id") % 50 == 0,
-        centroids=cents, exclude_groups=comp,
-    )
-
-
-_EDGE_CACHE: dict = {}
-
-
-def _graph_edges(spark):
-    """Canonical verified dup edges, materialized ONCE per bench session and
-    shared across the graph-analytics queries (triangle/k-truss/PageRank/
-    modularity/diameter) — the production shape: a campaign materializes its
-    edge list once and every diagnostic reads it, so per-query walls below
-    time the graph operator itself, not a rebuild of the dedup front-end."""
-    key = spark.sparkContext.applicationId
-    if key not in _EDGE_CACHE:
-        import __spark_entry__ as entry
-        from lmw_tree_spark.config import SMALL
-        from lmw_tree_spark.operators.lsh import candidate_edges, verify_edges
-
-        sigs = entry._fixed_signatures(spark)
-        verified = verify_edges(candidate_edges(sigs, SMALL), sigs, SMALL).where(
-            "is_dup"
-        )
-        edges = verified.select("src", "dst").localCheckpoint(eager=True)
-        _EDGE_CACHE.clear()  # one live bench session at a time
-        _EDGE_CACHE[key] = (sigs, edges)
-    return _EDGE_CACHE[key]
-
-
-def _triangle_production(spark, sf_dir):
-    """Production-config triangle support (no oracle-exchange write on the
-    timed path): verified image edges -> per-edge support."""
-    from lmw_tree_spark.operators.graph import triangle_supports
-
-    _sigs, edges = _graph_edges(spark)
-    return triangle_supports(edges)
-
-
-def _pagerank_production(spark, sf_dir):
-    """Production-config dup-hub PageRank (no exchange write on the timed path)."""
-    from lmw_tree_spark.operators.graph import pagerank
-
-    _sigs, edges = _graph_edges(spark)
-    return pagerank(edges, iters=5)
-
-
-def _modularity_production(spark, sf_dir):
-    """Production-config per-community modularity of the CC dup partition."""
-    from lmw_tree_spark.operators.ccomp import connected_components
-    from lmw_tree_spark.operators.graph import modularity_by_community
-
-    _sigs, edges = _graph_edges(spark)
-    return modularity_by_community(edges, connected_components(edges))
-
-
-def _diameter_production(spark, sf_dir):
-    """Production-config dup-group diameter audit."""
-    from lmw_tree_spark.operators.ccomp import connected_components
-    from lmw_tree_spark.operators.dedup import group_diameter
-
-    sigs, edges = _graph_edges(spark)
-    return group_diameter(
-        connected_components(edges, vertices=sigs), sigs, size_cap=64
-    )
-
-
-def _bucket_skew_production(spark, sf_dir):
-    """Production-config bucket-size skew report over the four modalities."""
-    import __spark_entry__ as entry
-    from lmw_tree_spark.config import SMALL
-    from lmw_tree_spark.operators.lsh import bucket_skew_stats, tagged_candidate_buckets
-
-    sigs = entry._fixed_signatures(spark)
-    return bucket_skew_stats(tagged_candidate_buckets(sigs, SMALL))
-
-
-def _ktruss_production(spark, sf_dir):
-    """Production-config edge-hardened dedup: 3-truss peel -> CC."""
-    from lmw_tree_spark.operators.ccomp import connected_components
-    from lmw_tree_spark.operators.graph import ktruss
-
-    sigs, edges = _graph_edges(spark)
-    return connected_components(ktruss(edges, k=3, max_rounds=3), vertices=sigs)
-
-
-def _pq_production(spark, sf_dir):
-    """Production-config PQ ADC top-k (no oracle-exchange materialization):
-    train on the hash-ordered sample, encode, ADC-scan — the compressed-domain
-    path as a user runs it."""
-    import __spark_entry__ as entry
-    from pyspark.sql import functions as F
-
-    from lmw_tree_spark.operators.pq import pq_adc_topk, train_pq
-
-    emb = entry._synthetic_embeddings(spark, 1000).persist()
-    cb = train_pq(emb, m=8, ksub=16, seed=42)
-    return pq_adc_topk(emb, cb, k=3, query_pred=F.col("vec_id") % 50 == 0)
-
-
-def _srp_production(spark, sf_dir):
-    """Production-config SRP-LSH near-dup (pair_cap=256 chain+clique bound,
-    no oracle-exchange materialization)."""
-    import __spark_entry__ as entry
-
-    from lmw_tree_spark.operators.srp import srp_neardup_pairs
-
-    emb = entry._synthetic_embeddings(spark, 1000).persist()
-    return srp_neardup_pairs(emb, min_cosine=0.8, pair_cap=256)
-
-
-def _crop_production(spark, sf_dir):
-    """Production-config crop-robust tile dedup (no oracle-exchange pixel
-    materialization): tile-hash grid + guarded hash self-join over a 2000-image
-    corpus — decode-heavy map stage + all-JVM pairing."""
-    from lmw_tree_spark.operators.pixels import tile_ahash, tile_match_pairs
-    from lmw_tree_spark.sources.images import generate_images
-
-    images = generate_images(spark, 2000)
-    return tile_match_pairs(tile_ahash(images, tile=16), min_shared=2)
-
-
-def _phash_production(spark, sf_dir):
-    """Production-config DCT-pHash near-dup over 2000 images (no
-    oracle-exchange pixel materialization): decode + int64 DCT map stage,
-    then the all-JVM pigeonhole band algebra."""
-    from pyspark.sql import functions as F
-    from lmw_tree_spark.operators.dedup import simhash_dedup
-    from lmw_tree_spark.operators.pixels import phash_images
-    from lmw_tree_spark.sources.images import generate_images
-
-    ph = phash_images(generate_images(spark, 2000)).select(
-        F.substring("image_id", 4, 10).cast("long").alias("doc_id"),
-        F.col("phash").alias("simhash"),
-    )
-    return simhash_dedup(ph, max_dist=6, pair_cap=64, sh=ph)
-
-
-def _sharpness_production(spark, sf_dir):
-    """Production-config sharpness/exposure gate over 2000 images — pure map,
-    integer Laplacian algebra."""
-    from lmw_tree_spark.operators.pixels import sharpness_stats
-    from lmw_tree_spark.sources.images import generate_images
-
-    return sharpness_stats(generate_images(spark, 2000)).where("keep")
-
-
-def _sq8_production(spark, sf_dir):
-    """Production-config SQ8 recall eval (no oracle-exchange materialization):
-    int8 scalar-quantized vs exact fixed-point top-3 over 4000 vectors —
-    all-JVM integer column algebra."""
-    import __spark_entry__ as entry
-    from pyspark.sql import functions as F
-    from lmw_tree_spark.operators.pq import fixedpoint_topk, sq8_topk
-
-    emb = entry._synthetic_embeddings(spark, 4000).persist()
-    pred = F.col("vec_id") % 50 == 0
-    exact = fixedpoint_topk(emb, k=3, query_pred=pred)
-    approx = sq8_topk(emb, k=3, query_pred=pred)
-    return (
-        exact.select("query_id", "neighbor_id")
-        .join(approx.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("hits"))
-    )
-
-
-def _entropy_production(spark, sf_dir):
-    """Production-config low-information gate over 2000 images (no
-    oracle-exchange pixel materialization): decode + 256-bin integer luma
-    histogram map stage, entropy + keep decision in JVM column algebra."""
-    from lmw_tree_spark.operators.pixels import entropy_gate, luma_histogram
-    from lmw_tree_spark.sources.images import generate_images
-
-    return entropy_gate(luma_histogram(generate_images(spark, 2000)))
-
-
-def _letterbox_production(spark, sf_dir):
-    """Production-config letterbox/pillarbox crop detection over 2000 images
-    (no oracle-exchange pixel materialization): pure Arrow map stage, run
-    lengths of flat rows/columns in NumPy, fixed-width output rows."""
-    from lmw_tree_spark.operators.pixels import letterbox_crop
-    from lmw_tree_spark.sources.images import generate_images
-
-    return letterbox_crop(generate_images(spark, 2000))
-
-
-def _padded_production(spark, sf_dir):
-    """Production-config padded re-upload recovery over 2000 images (no
-    oracle-exchange pixel materialization): crop-normalized DCT pHash map
-    stage, then the exact-equality hash self-join."""
-    from pyspark.sql import functions as F
-
-    from lmw_tree_spark.operators.pixels import phash_cropped
-    from lmw_tree_spark.sources.images import generate_images
-
-    ph = phash_cropped(generate_images(spark, 2000))
-    a = ph.select(F.col("image_id").alias("src"), "phash")
-    b = ph.select(F.col("image_id").alias("dst"), "phash")
-    return a.join(b, "phash").where(F.col("src") < F.col("dst"))
-
-
-def _watermark_production(spark, sf_dir):
-    """Production-config watermark/logo template mining over 2000 images (no
-    oracle-exchange pixel materialization): tile-ahash Arrow map stage, then
-    the all-JVM template groupBy + broadcast-back rollup."""
-    from lmw_tree_spark.operators.pixels import overlay_flags, tile_ahash
-    from lmw_tree_spark.sources.images import generate_images
-
-    return overlay_flags(tile_ahash(generate_images(spark, 2000), tile=16), min_images=8)
-
-
-def _color_production(spark, sf_dir):
-    """Production-config grayscale/colorfulness gate over 2000 images (no
-    oracle-exchange pixel materialization): integer opponent-axis sums in the
-    Arrow decode stage, gate algebra in JVM whole-stage codegen."""
-    from lmw_tree_spark.operators.pixels import color_gate, color_stats
-    from lmw_tree_spark.sources.images import generate_images
-
-    return color_gate(color_stats(generate_images(spark, 2000)))
-
-
-def _textov_production(spark, sf_dir):
-    """Production-config burned-in-text gate over 2000 images: gradient flip
-    counting in the Arrow decode stage, gate in JVM projection."""
-    from lmw_tree_spark.operators.pixels import (
-        text_overlay_gate,
-        text_overlay_stats,
-    )
-    from lmw_tree_spark.sources.images import generate_images
-
-    return text_overlay_gate(text_overlay_stats(generate_images(spark, 2000)))
-
-
-def _funnel_production(spark, sf_dir):
-    """Production-config fused image funnel over 2000 images: ONE decode pass
-    extracting all four gates' features, decisions in one JVM projection —
-    compare its wall time against the per-gate queries it replaces
-    (entropy_filter + color_filter + sharpness_filter + collage_filter)."""
-    from lmw_tree_spark.operators.pixels import gate_features, image_gates
-    from lmw_tree_spark.sources.images import generate_images
-
-    return image_gates(gate_features(generate_images(spark, 2000)))
-
-
-def _dbscan_production(spark, sf_dir):
-    """Production-config DBSCAN: near-dup-tight eps (cosine >= 0.75) over the
-    embeddings table. The oracled query keeps the loose 0.35 eps whose dense
-    graph exercises every branch; this times the realistic sparse-graph
-    config — the same oracle-config/production-config split the minhash
-    query uses."""
-    import os
-
-    from lmw_tree_spark.operators.density import dbscan_embeddings
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    return dbscan_embeddings(emb, min_cosine=0.75, min_core_neighbors=3)
-
-
-def _knn_production(spark, sf_dir):
-    """Production-config mutual-kNN graph: APPROXIMATE (n_probe < n_cells),
-    the label-propagation input shape a real run uses. The oracled query runs
-    probe-all (n_probe == n_cells) so the graph is exact and SQL-replayable;
-    timing that times the exactness harness, not the operator — the same
-    oracle-config/production-config split as minhash/dbscan above."""
-    import os
-
-    from lmw_tree_spark.operators.similarity import mutual_knn_edges
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    return mutual_knn_edges(emb, k=5, n_cells=64, n_probe=4)
-
-
-def _collage_production(spark, sf_dir):
-    """Production-config collage gate over 2000 images (no oracle-exchange
-    pixel materialization): tile-ahash Arrow map stage, bounded two-stage
-    repeat rollup in JVM."""
-    from lmw_tree_spark.operators.pixels import tile_ahash, tile_self_similarity
-    from lmw_tree_spark.sources.images import generate_images
-
-    return tile_self_similarity(tile_ahash(generate_images(spark, 2000), tile=16))
-
-
-def _keyframes_production(spark, sf_dir):
-    """Production-config shot detection + keyframe selection over 96 clips
-    (no oracle-exchange histogram materialization): decode-heavy Arrow map
-    stage + all-JVM segmentation and argmin algebra."""
-    import __spark_entry__ as entry
-    from lmw_tree_spark.sources.multimodal import (
-        frame_luma_histograms,
-        select_keyframes,
-        shot_boundaries,
-    )
-
-    videos = entry._synthetic_cut_videos(spark, n=96)
-    hist = frame_luma_histograms(videos).persist()
-    return select_keyframes(hist, shot_boundaries(hist))
+# The headline queries, by queries() name.
+QUERIES = [
+    "pricing_summary", "subset_semi_join", "topk_dims", "token_count",
+    "lang_id", "exact_dedup", "repetition_filter", "stratified_sample",
+    "scrub_pii", "regex_tokens",
+    "cms_heavy_hitters", "bloom_membership", "bm25_topk", "pack_sequences",
+    "decontaminate", "unigram_nll",
+    "token_jaccard", "editdist_verify",
+    "simhash32", "minhash_sql",
+    "suffix_pairs", "cosine_topk", "centroid_assign", "dense_kmeans",
+    "embedding_neardup", "dbscan_embeddings", "minhash_lsh_dedup",
+    "simhash_dedup", "ivf_ann", "pq_ann", "srp_neardup",
+    "user_sessions", "events_hourly",
+    "semantic_dedup", "vocab_stats", "group_size_histogram", "reduce_dims",
+    "crop_dedup", "sharpness_filter", "shard_manifest",
+    "url_canonical", "mixture_sample", "domain_cap", "align_filter",
+    "ar_bucket", "epoch_repeat",
+    "hll_distinct", "bpe_train", "hard_negatives",
+    "bpe_encode", "interleave_docs", "triangle_support", "ktruss_dedup",
+    "sq8_recall", "shot_keyframes", "html_extract", "phash_pixels",
+    "incremental_phash", "token_budget", "embedding_outliers", "corpus_drift", "retrieval_eval",
+    "safety_filter", "curation_funnel", "quality_classifier", "classifier_train",
+    "entropy_filter", "letterbox_crop", "padded_dedup", "watermark_flags",
+    "color_filter", "affix_strip", "compaction_plan", "group_merge",
+    "collage_filter", "image_funnel", "text_overlay", "dedup_attribution",
+    "phash_radius_sweep",
+    "pagerank_hubs", "modularity", "group_diameter", "bucket_skew",
+    "silhouette", "knn_graph",
+]
+
+# The ~31 distinct words of the sf documents give BPE too few merges; its
+# 1024-merge row trains on this many distinct synthetic words.
+BPE_WORDS = 60_000
 
 
 def run_queries(spark, sf_dir: str) -> dict:
     import __spark_entry__ as entry
 
-    names = [
-        "pricing_summary", "subset_semi_join", "topk_dims", "token_count",
-        "lang_id", "exact_dedup", "repetition_filter", "stratified_sample",
-        "scrub_pii", "regex_tokens",
-        "cms_heavy_hitters", "bloom_membership", "bm25_topk", "pack_sequences",
-        "decontaminate", "unigram_nll",
-        "token_jaccard", "editdist_verify",
-        "simhash32", "minhash_sql",
-        "suffix_pairs", "cosine_topk", "centroid_assign", "dense_kmeans",
-        "embedding_neardup", "dbscan_embeddings", "minhash_lsh_dedup",
-        "simhash_dedup", "ivf_ann", "pq_ann", "srp_neardup",
-        "user_sessions", "events_hourly",
-        "semantic_dedup", "vocab_stats", "group_size_histogram", "reduce_dims",
-        "crop_dedup", "sharpness_filter", "shard_manifest",
-        "url_canonical", "mixture_sample", "domain_cap", "align_filter",
-        "ar_bucket", "epoch_repeat",
-        "hll_distinct", "bpe_train", "hard_negatives",
-        "bpe_encode", "interleave_docs", "triangle_support", "ktruss_dedup",
-        "sq8_recall", "shot_keyframes", "html_extract", "phash_pixels",
-        "incremental_phash", "token_budget", "embedding_outliers", "corpus_drift", "retrieval_eval",
-        "safety_filter", "curation_funnel", "quality_classifier", "classifier_train",
-        "entropy_filter", "letterbox_crop", "padded_dedup", "watermark_flags",
-        "color_filter", "affix_strip", "compaction_plan", "group_merge",
-        "collage_filter", "image_funnel", "text_overlay", "dedup_attribution",
-        "phash_radius_sweep",
-        "pagerank_hubs", "modularity", "group_diameter", "bucket_skew",
-        "silhouette", "knn_graph",
-    ]
     qs = entry.queries()
-    qs["minhash_lsh_dedup"] = _minhash_production
-    qs["hard_negatives"] = _hard_negatives_production
-    qs["triangle_support"] = _triangle_production
-    qs["ktruss_dedup"] = _ktruss_production
-    qs["pagerank_hubs"] = _pagerank_production
-    qs["modularity"] = _modularity_production
-    qs["group_diameter"] = _diameter_production
-    qs["bucket_skew"] = _bucket_skew_production
-    qs["pq_ann"] = _pq_production
-    qs["srp_neardup"] = _srp_production
-    qs["crop_dedup"] = _crop_production
-    qs["sharpness_filter"] = _sharpness_production
-    qs["phash_pixels"] = _phash_production
-    qs["sq8_recall"] = _sq8_production
-    qs["shot_keyframes"] = _keyframes_production
-    qs["entropy_filter"] = _entropy_production
-    qs["letterbox_crop"] = _letterbox_production
-    qs["padded_dedup"] = _padded_production
-    qs["watermark_flags"] = _watermark_production
-    qs["color_filter"] = _color_production
-    qs["collage_filter"] = _collage_production
-    qs["image_funnel"] = _funnel_production
-    qs["text_overlay"] = _textov_production
-    qs["dbscan_embeddings"] = _dbscan_production
-    qs["knn_graph"] = _knn_production
     out = {}
-    for name in names:
+    for name in QUERIES:
         # min-of-2: the first run pays Python-worker spin-up / first-import /
         # page-fault warmup for that query's kernel path (measured 2-7x at this
         # scale: minhash production config 12.8 s cold vs 1.8 s warm in the
@@ -618,7 +262,7 @@ def run_queries(spark, sf_dir: str) -> dict:
         secs = []
         for _ in range(2):
             t0 = time.time()
-            qs[name](spark, sf_dir).count()
+            qs[name](spark, sf_dir, **entry.BENCH_PARAMS.get(name, {})).count()
             secs.append(round(time.time() - t0, 3))
         out[name] = min(secs)
     return out
@@ -628,27 +272,17 @@ def main():
     sf = _sf()
     n_images = max(700, int(sf * 70_000))
 
-    # EM-iteration throughput vs reference single-node, at two levels — runs
-    # FIRST, before any other session churns the page cache (this VM's
-    # fresh-page faults cost ~100 MB/s; measured order effects of 10-20%).
-    # Best-of-3 sessions at the headline level, min-of-iters within each: the
-    # VM's 2-5x wall-clock noise is session-correlated (a whole session can
-    # land in a slow window — observed 84k vs 150k sigs/s for identical code
-    # minutes apart), so three independent sessions are three draws; the best
-    # iteration is the engine signal, the worst is the machine's.
-    # INTERLEAVED sessions (32/8 alternating): the VM's slow windows are
-    # session-correlated, so alternating levels means an unlucky window hits
-    # both levels instead of biasing one — the same protocol as the signature
-    # scaling pairs below.
-    em32_runs = [run_em_iters(f"local[{CPUS}]", CPUS, EM_ROWS, iters=6)]
-    em8_runs = [run_em_iters("local[8]", 8, EM_ROWS, iters=4)]
-    em32_runs.append(run_em_iters(f"local[{CPUS}]", CPUS, EM_ROWS, iters=6))
-    em8_runs.append(run_em_iters("local[8]", 8, EM_ROWS, iters=4))
-    em32_runs.append(run_em_iters(f"local[{CPUS}]", CPUS, EM_ROWS, iters=6))
-    em32 = max(em32_runs, key=lambda r: r["sigs_per_sec"])
-    em32["session_best_iters"] = [min(r["iter_secs"]) for r in em32_runs]
-    em8 = max(em8_runs, key=lambda r: r["sigs_per_sec"])
-    em8["session_best_iters"] = [min(r["iter_secs"]) for r in em8_runs]
+    # EM-iteration throughput vs reference single-node — runs FIRST, before
+    # any other session churns the page cache (fresh-page faults on the
+    # 4-core benchmark VM cost ~100 MB/s; measured order effects of 10-20%).
+    # Best-of-3 sessions, min-of-iters within each: the VM's 2-5x wall-clock
+    # noise is session-correlated (a whole session can land in a slow window
+    # — observed 84k vs 150k sigs/s for identical code minutes apart), so
+    # three independent sessions are three draws; the best iteration is the
+    # engine signal, the worst is the machine's.
+    em_runs = [run_em_iters(f"local[{CPUS}]", CPUS, EM_ROWS, iters=6) for _ in range(3)]
+    em = max(em_runs, key=lambda r: r["sigs_per_sec"])
+    em["session_best_iters"] = [min(r["iter_secs"]) for r in em_runs]
 
     # flagship e2e at full parallelism — min-of-2 fresh sessions: identical
     # runs on this VM swing 2-5x (page-cache / host-scheduling noise, see
@@ -657,61 +291,34 @@ def main():
     runs = [run_flagship(f"local[{CPUS}]", CPUS, n_images) for _ in range(2)]
     big = min(runs, key=lambda r: r["t_total"])
     big["all_run_totals"] = [r["t_total"] for r in runs]
-    em_t8 = min(min(r["iter_secs"]) for r in em8_runs)
-    em_t32 = min(min(r["iter_secs"]) for r in em32_runs)
-    em_eff = round((em_t8 / em_t32) / (CPUS / 8), 3)
 
-    # primary scaling evidence (north rule, N vs 4N): signature stage at 1 vs
-    # 4 cores. The VM's aggregate memory bandwidth is only ~3-4x one core's, so
-    # 8 concurrent workers already graze the MACHINE ceiling — 1→4 sits safely
-    # below it and measures the ENGINE's scaling (a real cluster gives each
-    # executor its own memory bus). Wall clock swings 2-5x between identical
-    # runs minutes apart, so levels are sampled in ALTERNATING sessions and
-    # min-of-all-trials per level is used — an unlucky page-cache window then
-    # hurts both levels instead of biasing the ratio.
+    # scaling: signature stage at 1 vs CPUS cores. Wall clock swings 2-5x
+    # between identical runs minutes apart, so levels are sampled in
+    # ALTERNATING sessions and min-of-all-trials per level is used — an
+    # unlucky page-cache window then hurts both levels instead of biasing the
+    # ratio.
     sig_n = max(50_000, int(sf * 500_000))
-    sig1 = run_sig_stage("local[1]", 1, sig_n)
-    sig4 = run_sig_stage("local[4]", 4, sig_n)
-    sig1b = run_sig_stage("local[1]", 1, sig_n, trials=2)
-    sig4b = run_sig_stage("local[4]", 4, sig_n, trials=2)
-    sig1["trial_secs"] += sig1b["trial_secs"]
-    sig4["trial_secs"] += sig4b["trial_secs"]
-    t1, t4 = min(sig1["trial_secs"]), min(sig4["trial_secs"])
-    sig1["images_per_sec"] = round(sig_n / t1, 0)
-    sig4["images_per_sec"] = round(sig_n / t4, 0)
-    sig_eff = round((t1 / t4) / 4, 3)
-
-    # secondary pair at 2 vs 8 cores (larger rows so the 8-core trial dwarfs
-    # startup noise) — reported transparently; 8 workers already touch the VM
-    # bandwidth ceiling, so this reads lower than the engine's true scaling
-    sig_n2 = max(100_000, int(sf * 1_000_000))
-    s2 = run_sig_stage("local[2]", 2, sig_n2, trials=2)
-    s8 = run_sig_stage("local[8]", 8, sig_n2, trials=2)
-    s2b = run_sig_stage("local[2]", 2, sig_n2, trials=2)
-    s8b = run_sig_stage("local[8]", 8, sig_n2, trials=2)
-    t2 = min(s2["trial_secs"] + s2b["trial_secs"])
-    t8 = min(s8["trial_secs"] + s8b["trial_secs"])
-    sig_eff_28 = round((t2 / t8) / 4, 3)
+    trials = {1: [], CPUS: []}
+    for n_trials in (3, 2):
+        for cpus in trials:
+            trials[cpus] += run_sig_stage(f"local[{cpus}]", cpus, sig_n, n_trials)["trial_secs"]
+    t1, tn = min(trials[1]), min(trials[CPUS])
 
     # headline queries on the driver tables
+    import __spark_entry__ as entry
     from lmw_tree_spark.session import get_spark
 
     spark = get_spark(app_name="bench-queries", master=f"local[{CPUS}]")
     queries = run_queries(spark, SF_DIR)
 
-    # 1024-merge BPE training on the documents table — the vocabulary-scale
-    # trainer cost (the oracle row trains far fewer merges); one distributed
-    # word aggregation + viability prune, then the driver-side heap loop
-    from lmw_tree_spark.operators.bpe import bpe_train
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    # the vocabulary-scale BPE trainer cost: one distributed word
+    # aggregation + viability prune, then the driver-side heap loop
     t0 = time.time()
-    merges_1024, words_1024 = bpe_train(docs, 1024)
-    n_words = words_1024.count()
+    n_merges = entry.q_bpe_train(spark, SF_DIR, n_merges=1024, n_words=BPE_WORDS).count()
     bpe_1024 = {
         "n_merges_requested": 1024,
-        "n_merges_done": len(merges_1024),
-        "distinct_words": n_words,
+        "n_merges_done": n_merges,
+        "distinct_words": BPE_WORDS,
         "secs": round(time.time() - t0, 3),
     }
     spark.stop()
@@ -730,34 +337,16 @@ def main():
             "job": "signature_extraction",
             "rows": sig_n,
             "cpus_small": 1,
-            "cpus_big": 4,
-            "t_small": min(sig1["trial_secs"]),
-            "t_big": min(sig4["trial_secs"]),
-            "images_per_sec_small": sig1["images_per_sec"],
-            "images_per_sec_big": sig4["images_per_sec"],
-            "efficiency": sig_eff,
-            "note": (
-                "1 vs 4 cores (N vs 4N, north rule): measured below this VM's "
-                "aggregate-memory-bandwidth ceiling (~3-4x one core's, reached "
-                "near 8 workers), so it reflects the engine, not the machine. "
-                "The 2->8 pair and the EM 8->32 pair are reported too; they "
-                "progressively measure that ceiling."
-            ),
-        },
-        "scaling_2_8": {
-            "job": "signature_extraction",
-            "rows": sig_n2,
-            "cpus_small": 2,
-            "cpus_big": 8,
-            "t_small": t2,
-            "t_big": t8,
-            "efficiency": sig_eff_28,
+            "cpus_big": CPUS,
+            "t_small": t1,
+            "t_big": tn,
+            "images_per_sec_small": round(sig_n / t1, 0),
+            "images_per_sec_big": round(sig_n / tn, 0),
+            "efficiency": round((t1 / tn) / CPUS, 3),
         },
         "em_iter": {
             "rows": EM_ROWS,
-            "local8": em8,
-            f"local{CPUS}": em32,
-            "efficiency_8_to_32": em_eff,
+            f"local{CPUS}": em,
             "reference_single_node_sigs_per_sec": 226000,
         },
         "bpe_1024": bpe_1024,

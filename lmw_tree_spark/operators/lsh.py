@@ -116,8 +116,6 @@ def lgram_buckets(sigs: DataFrame, cfg: PipelineConfig) -> DataFrame:
     this is the scalable grouping stage of the suffix-array substring pass
     (operators/suffix.py runs the exact per-group SA verification; in the image
     pipeline the verified-pair stage plays that role)."""
-    from lmw_tree_spark.functions.suffix import winnow_select
-
     k = cfg.shingle_k
     window = cfg.substring_len - k + 1
 

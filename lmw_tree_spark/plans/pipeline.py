@@ -25,6 +25,7 @@ Without a checkpoint dir the run is never sliced.
 
 from __future__ import annotations
 
+import gc
 from dataclasses import dataclass
 from functools import reduce
 
@@ -70,7 +71,11 @@ def run_pipeline(
         # stage (or slice) just materialized to parquet, so its shuffle files
         # are dead weight — force a driver GC so ContextCleaner deletes them
         # before the next one starts (peak local-disk = max-over-stages, not
-        # sum; the 8M-image probe only completes this way — BASELINE.md)
+        # sum; the 8M-image probe only completes this way — BASELINE.md).
+        # py4j proxies sit in reference cycles, so the JVM objects they pin
+        # (connected_components' localCheckpoint RDDs among them) are only
+        # released to the JVM GC by a Python cyclic collection first.
+        gc.collect()
         try:
             spark.sparkContext._jvm.System.gc()
         except AttributeError:

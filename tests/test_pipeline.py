@@ -359,6 +359,14 @@ def unsliced_run(spark, tmp_path_factory):
     return images, _outputs(spark, ck, res), buckets
 
 
+def _local_checkpoints(jsc):
+    """Ids of the RDDs registered as persistent because of localCheckpoint."""
+    return {
+        int(k) for k, rdd in jsc.getPersistentRDDs().items()
+        if rdd.rdd().isLocallyCheckpointed()
+    }
+
+
 def _count_calls(monkeypatch, owner, attr, before=None):
     """Wrap ``owner.attr`` to count its calls, running ``before(n, *args)``
     first on the n-th call (0-based); returns the call list."""
@@ -380,8 +388,9 @@ def test_sliced_pipeline_matches_unsliced(spark, tmp_path, monkeypatch, unsliced
     """Three committed slices of edge generation and verify give exactly the
     unsliced run's verified pairs, dup groups and assignments; each slice's
     persisted (bucket, salt) aggregation is released before the next slice
-    starts, a cache the caller owns survives, and every consumed
-    intermediate is deleted."""
+    starts, a cache the caller owns survives, every consumed intermediate is
+    deleted, and no localCheckpoint RDD of the run (connected_components
+    makes one per round) is still registered once it returns."""
     from pyspark import StorageLevel
 
     from lmw_tree_spark.operators import lsh
@@ -395,6 +404,7 @@ def test_sliced_pipeline_matches_unsliced(spark, tmp_path, monkeypatch, unsliced
     )
     monkeypatch.setattr(pipeline, "ROWS_PER_SLICE", SLICED_N // 3)
     jsc = spark.sparkContext._jsc
+    checkpointed_before = _local_checkpoints(jsc)
     persisted = []
 
     def at_slice_start(n, buckets, pair_cap, chain_salts):
@@ -413,6 +423,7 @@ def test_sliced_pipeline_matches_unsliced(spark, tmp_path, monkeypatch, unsliced
     assert _outputs(spark, ck, res) == want
     assert len(edge_calls) == 3 and len(verify_calls) == 3
     assert max(persisted[1:]) <= persisted[0], persisted
+    assert _local_checkpoints(jsc) <= checkpointed_before
     assert owned.storageLevel != StorageLevel.NONE
     owned.unpersist()
     assert sorted(os.listdir(ck)) == [
